@@ -62,6 +62,7 @@ from __future__ import annotations
 
 import json
 import os
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -1066,109 +1067,19 @@ def _load_minhash_verify_tier(spark: SparkSession, store: DedupIndexStore
     """The committed hashed-shingle verify tier (``verify=N`` dirs
     under the index path, listed in manifest meta). A manifest with
     committed corpus batches but NO verify tier predates r15 — loud
-    error pointing at the one-time backfill, never a silent fallback
-    to the wide corpus scan the tier exists to kill."""
+    error, never a silent fallback to the wide corpus scan the tier
+    exists to kill."""
     verify_batches = store.meta.get("verify_batches", [])
     if not verify_batches:
         if store.meta.get("corpus_batches"):
             raise ValueError(
                 f"index at {store.path!r} has committed corpus batches "
-                "but no verify tier (pre-r15 manifest) — run "
-                "backfill_minhash_verify_tier(spark, corpus_path, "
-                "index_path) once to derive the hashed-shingle tier "
-                "from the committed corpus text")
+                "but no verify tier (pre-r15 manifest) — the probe "
+                "has no hashed-shingle evidence to verify against; "
+                "rebuild the index and corpus from the raw documents")
         return spark.createDataFrame([], _VERIFY_SCHEMA)
     return spark.read.parquet(
         *[_join(store.path, b) for b in verify_batches])
-
-
-def backfill_minhash_verify_tier(spark: SparkSession, corpus_path: str,
-                                 index_path: str) -> str:
-    """One-time migration for a pre-r15 maintained minhash corpus:
-    derive the hashed-shingle verify tier from the committed corpus
-    text and publish it in one manifest swap. The dir is named after
-    the current high-water mark, which future trigger ids (strictly
-    greater) can never collide with."""
-    store = open_dedup_index(index_path)
-    store._require("minhash")
-    if store.meta.get("verify_batches"):
-        return ""
-    corpus_batches = store.meta.get("corpus_batches", [])
-    if not corpus_batches:
-        store.meta["verify_batches"] = []
-        store._write_manifest()
-        return ""
-    docs = spark.read.parquet(
-        *[_join(corpus_path, b) for b in corpus_batches])
-    name = f"verify={int(store.meta.get('last_stream_batch', 0))}"
-    (minhash_verify_rows(docs).sortWithinPartitions("doc_id")
-     .write.mode("overwrite").parquet(_join(index_path, name)))
-    store.meta["verify_batches"] = [name]
-    store._write_manifest()
-    return name
-
-
-def apply_dedup_maintenance_batch(spark: SparkSession, batch_df: DataFrame,
-                                  batch_id: int, corpus_path: str,
-                                  index_path: str,
-                                  compact_every: int | None = None,
-                                  stream_token: str | None = None,
-                                  candidate_pushdown: int | None = 4096,
-                                  compact_mode: str = "full") -> bool:
-    """One idempotent maintenance step: dedup ``batch_df`` against the
-    indexed corpus, append the survivors to the corpus, their band
-    rows to the index, and their hashed-shingle rows to the verify
-    tier. Returns False when ``batch_id`` was already committed
-    (crash-replay no-op).
-
-    Per-trigger IO is O(batch) + two NARROW seen-side scans — the
-    band index and the hashed-shingle verify tier (VERDICT r14
-    item 1): the wide survivors corpus is WRITE-ONLY here (read only
-    by :func:`load_maintained_corpus` consumers), exactly the
-    substring loop's proven flat-probe shape. ``candidate_pushdown``
-    further turns the verify scan into an ``isin`` point lookup over
-    the id-sorted tier when a trigger's candidate set fits the limit.
-
-    Commit protocol (single writer): the survivors land in a
-    batch-id-named corpus directory first (mode=overwrite, so a replay
-    rewrites identical content — the step is deterministic given the
-    committed index state), then the verify-tier directory, then ONE
-    atomic index-manifest publish commits the index rows AND the meta
-    (last committed micro-batch id + the corpus- and verify-batch
-    lists) together. A crash before the publish leaves orphan
-    directories the replay overwrites; a crash after it makes the
-    replay a no-op — readers only ever trust the manifest's lists, so
-    they never see survivors whose index rows aren't committed (the
-    state in which a replayed batch would self-collide with its own
-    index rows and dedup itself to nothing)."""
-    store = open_dedup_index(index_path)
-    _minhash_geometry(store)       # kind + basis-aware geometry guard
-    _check_stream_token(store, stream_token)
-    if batch_id <= store.meta.get("last_stream_batch", -1):
-        return False
-    corpus_batches = list(store.meta.get("corpus_batches", []))
-    verify_batches = list(store.meta.get("verify_batches", []))
-    seen_verify = _load_minhash_verify_tier(spark, store)
-    surv = dedup_incremental_survivors_indexed(
-        store, batch_df.select("doc_id", "text"), commit=False,
-        seen_verify=seen_verify, candidate_pushdown=candidate_pushdown)
-    surv = surv.localCheckpoint()
-    cname = f"batch={batch_id}"
-    (surv.write.mode("overwrite").parquet(_join(corpus_path, cname)))
-    vname = f"verify={batch_id}"
-    (minhash_verify_rows(surv).sortWithinPartitions("doc_id")
-     .write.mode("overwrite").parquet(_join(index_path, vname)))
-    meta = {"last_stream_batch": batch_id,
-            "corpus_batches": corpus_batches + [cname],
-            "verify_batches": verify_batches + [vname]}
-    if stream_token is not None:
-        meta["stream_token"] = stream_token
-    store.append(_minhash_rows_for_store(store, surv),
-                 meta_update=meta)
-    _run_compaction(spark, store, compact_every, compact_mode, [
-        (corpus_path, "corpus_batches", "corpus_compact_seq", "doc_id"),
-        (index_path, "verify_batches", "verify_compact_seq", "doc_id")])
-    return True
 
 
 def load_maintained_corpus(spark: SparkSession, corpus_path: str,
@@ -1598,8 +1509,8 @@ def rebuild_minhash_index_geometry(spark: SparkSession,
     compact never folds the full index with trigger appends.
     ``last_stream_batch`` is untouched — streaming replay idempotence
     holds. Defaults keep the current geometry (a pure md5->xxhash64
-    basis migration). Pre-r15 manifests without a verify tier must
-    run :func:`backfill_minhash_verify_tier` first (loud error).
+    basis migration). Pre-r15 manifests without a verify tier are a
+    loud error.
 
     Returns {"n_bands", "rows_per_band", "band_basis", "rows",
     "dir"}."""
@@ -1619,7 +1530,7 @@ def rebuild_minhash_index_geometry(spark: SparkSession,
             raise ValueError(
                 f"index at {index_path!r} has committed band rows but "
                 "no verify tier to re-sign from (pre-r15 manifest) — "
-                "run backfill_minhash_verify_tier once first")
+                "rebuild the index from the raw documents")
         # empty index: geometry/basis swap alone
     rows = bands_from_hashed_shingles(tier, n_bands, rows_per_band)
     name = store._next_name()
@@ -2039,40 +1950,126 @@ def vacuum_dedup_index(index_path: str,
     return out
 
 
+class _Tier(NamedTuple):
+    """One manifest-listed directory family a maintenance step writes
+    per trigger (the survivors corpus, the hashed-shingle verify tier,
+    the curation loop's fingerprint dirs, the float re-rank tier).
+    ``rows`` derives the trigger's directory content from the
+    checkpointed survivors; the dir is ``<base>/<prefix><batch_id>``
+    and its name joins ``meta[list_key]`` in the step's one publish.
+    ``order`` is the id clustering the family keeps through compaction
+    (None: a plain repartition); ``seq_key`` carries its monotonic
+    ``compact=K`` counter."""
+    base: str
+    list_key: str
+    seq_key: str
+    order: str | list | None
+    rows: Callable[[DataFrame], DataFrame]
+    prefix: str = "batch="
+
+
+def _corpus_tier(corpus_path: str, order="doc_id",
+                 rows: Callable[[DataFrame], DataFrame] = lambda s: s
+                 ) -> _Tier:
+    return _Tier(corpus_path, "corpus_batches", "corpus_compact_seq",
+                 order, rows)
+
+
+def _verify_tier(index_path: str) -> _Tier:
+    """The minhash loops' hashed-shingle verify tier, id-sorted so
+    ``candidate_pushdown``'s point lookup prunes row groups."""
+    return _Tier(index_path, "verify_batches", "verify_compact_seq",
+                 "doc_id",
+                 lambda s: minhash_verify_rows(s)
+                 .sortWithinPartitions("doc_id"),
+                 "verify=")
+
+
+def _check_compact_mode(compact_mode: str) -> None:
+    """Fail before anything is written: a mistyped mode must never
+    commit a trigger and only then raise inside the compaction."""
+    if compact_mode not in ("full", "tiered"):
+        raise ValueError(
+            f"compact_mode must be 'full' or 'tiered', got "
+            f"{compact_mode!r}")
+
+
 def _run_compaction(spark: SparkSession, store: DedupIndexStore,
                     compact_every: int | None, compact_mode: str,
-                    families: list) -> None:
-    """The loops' shared lifecycle step. ``compact_mode``:
+                    tiers: list) -> None:
+    """The loops' shared lifecycle step over the index store and each
+    declared tier. ``compact_mode``:
 
     - ``"full"`` — when the index reaches ``compact_every`` batch
-      dirs, fold EVERYTHING (index + each family) to one dir each:
+      dirs, fold EVERYTHING (index + each tier) to one dir each:
       minimal read set, but the rewrite is O(seen), spiking the
       trigger it lands on (7.4-10.1 s vs ~2.4 s steady p50 measured
       in r14);
     - ``"tiered"`` — run a bounded LSM pass every trigger (fanout =
       ``compact_every``; no-op unless a level qualifies), so the
       worst-case trigger rewrites ~compact_every small dirs instead
-      of the whole history (VERDICT r14 item 4).
-
-    ``families`` lists the (base_path, list_key, seq_key) meta-dir
-    families compacted alongside the index store."""
+      of the whole history (VERDICT r14 item 4)."""
     if not compact_every:
         return
-    if compact_mode == "tiered":
-        store.compact(spark, max_batches=compact_every)
-        for base, lk, sk, oc in families:
-            _compact_meta_dirs(spark, base, store, lk, sk,
-                               max_batches=compact_every, order_col=oc)
-    elif compact_mode == "full":
-        if len(store._batches) >= compact_every:
-            store.compact(spark)
-            for base, lk, sk, oc in families:
-                _compact_meta_dirs(spark, base, store, lk, sk,
-                                   order_col=oc)
-    else:
-        raise ValueError(
-            f"compact_mode must be 'full' or 'tiered', got "
-            f"{compact_mode!r}")
+    fanout = compact_every if compact_mode == "tiered" else None
+    if fanout is None and len(store._batches) < compact_every:
+        return
+    store.compact(spark, max_batches=fanout)
+    for t in tiers:
+        _compact_meta_dirs(spark, t.base, store, t.list_key, t.seq_key,
+                           max_batches=fanout, order_col=t.order)
+
+
+def _maintenance_step(spark: SparkSession, index_path: str,
+                      batch_id: int, stream_token: str | None,
+                      compact_every: int | None, compact_mode: str, *,
+                      guard: Callable, survivors: Callable,
+                      tiers: Callable, index_rows: Callable,
+                      meta: Callable | None = None) -> bool:
+    """The one commit path of the four maintenance loops. Per-kind
+    code arrives as callables over the freshly opened store:
+    ``guard(store)`` (kind/geometry and pinned-flag checks),
+    ``survivors(store)`` (the probe), ``tiers(store)`` (the declared
+    :class:`_Tier` families), ``index_rows(store, surv)`` and
+    ``meta(store)`` (extra manifest meta, called after the tier writes
+    so it may read an ``Observation`` that rode one of them). Returns
+    False when ``batch_id`` was already committed (crash-replay
+    no-op).
+
+    Commit protocol (single writer): the survivors are checkpointed
+    once, every tier lands in its batch-id-named directory
+    (mode=overwrite, so a replay rewrites identical content — the
+    step is deterministic given the committed state), then ONE atomic
+    index-manifest publish (:meth:`DedupIndexStore.append`) commits
+    the index rows AND the meta (last committed micro-batch id, each
+    tier's dir list, the stream token) together. A crash before the
+    publish leaves orphan directories the replay overwrites; a crash
+    after it makes the replay a no-op — readers only ever trust the
+    manifest's lists, so they never see survivors whose index rows
+    aren't committed (the state in which a replayed batch would
+    self-collide with its own index rows and dedup itself to
+    nothing). Compaction of the index and the same declared tiers
+    follows the publish."""
+    _check_compact_mode(compact_mode)
+    store = open_dedup_index(index_path)
+    guard(store)
+    _check_stream_token(store, stream_token)
+    if batch_id <= store.meta.get("last_stream_batch", -1):
+        return False
+    families = tiers(store)
+    surv = survivors(store).localCheckpoint()
+    update = {"last_stream_batch": batch_id}
+    for t in families:
+        name = f"{t.prefix}{batch_id}"
+        t.rows(surv).write.mode("overwrite").parquet(_join(t.base, name))
+        update[t.list_key] = list(store.meta.get(t.list_key, [])) + [name]
+    if meta is not None:
+        update.update(meta(store))
+    if stream_token is not None:
+        update["stream_token"] = stream_token
+    store.append(index_rows(store, surv), meta_update=update)
+    _run_compaction(spark, store, compact_every, compact_mode, families)
+    return True
 
 
 class _trigger_shuffle_width:
@@ -2097,6 +2094,82 @@ class _trigger_shuffle_width:
         if self.width is not None:
             self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
         return False
+
+
+def _every_committed(every: int | None, name: str,
+                     check: Callable) -> Callable | None:
+    """Post-commit hook running ``check(spark, batch_id)`` on every
+    ``every``-th micro-batch id (ids > 0); None when ``every`` is."""
+    if every is None:
+        return None
+    if every < 1:
+        raise ValueError(f"{name} must be >= 1, got {every}")
+
+    def hook(spark: SparkSession, batch_id: int) -> None:
+        if batch_id > 0 and batch_id % every == 0:
+            check(spark, batch_id)
+    return hook
+
+
+def _start_maintenance_stream(stream: DataFrame, checkpoint_dir: str,
+                              step: Callable, available_now: bool,
+                              processing_time: str, compact_mode: str,
+                              trigger_shuffle_partitions: int | None,
+                              post_commit: Callable | None = None):
+    """The one stream starter of the four maintenance loops:
+    ``step(spark, batch_df, batch_id)`` is the loop's ``apply_*``
+    call (keyed on ``checkpoint_dir`` as its stream token), bracketed
+    by the per-trigger shuffle width. ``post_commit(spark, batch_id)``
+    runs only when the step committed — a replayed trigger never
+    re-runs it, so restart idempotence holds."""
+    _check_compact_mode(compact_mode)
+
+    def _proc(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        with _trigger_shuffle_width(spark, trigger_shuffle_partitions):
+            if step(spark, batch_df, batch_id) and post_commit is not None:
+                post_commit(spark, batch_id)
+
+    writer = (stream.writeStream.foreachBatch(_proc)
+              .option("checkpointLocation", checkpoint_dir))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=processing_time)
+    return writer.start()
+
+
+def apply_dedup_maintenance_batch(spark: SparkSession, batch_df: DataFrame,
+                                  batch_id: int, corpus_path: str,
+                                  index_path: str,
+                                  compact_every: int | None = None,
+                                  stream_token: str | None = None,
+                                  candidate_pushdown: int | None = 4096,
+                                  compact_mode: str = "full") -> bool:
+    """One idempotent maintenance step: dedup ``batch_df`` against the
+    indexed corpus, append the survivors to the corpus, their band
+    rows to the index, and their hashed-shingle rows to the verify
+    tier. Returns False when ``batch_id`` was already committed
+    (crash-replay no-op; commit protocol in :func:`_maintenance_step`).
+
+    Per-trigger IO is O(batch) + two NARROW seen-side scans — the
+    band index and the hashed-shingle verify tier (VERDICT r14
+    item 1): the wide survivors corpus is WRITE-ONLY here (read only
+    by :func:`load_maintained_corpus` consumers), exactly the
+    substring loop's proven flat-probe shape. ``candidate_pushdown``
+    further turns the verify scan into an ``isin`` point lookup over
+    the id-sorted tier when a trigger's candidate set fits the limit."""
+    return _maintenance_step(
+        spark, index_path, batch_id, stream_token, compact_every,
+        compact_mode,
+        guard=_minhash_geometry,   # kind + basis-aware geometry guard
+        survivors=lambda store: dedup_incremental_survivors_indexed(
+            store, batch_df.select("doc_id", "text"), commit=False,
+            seen_verify=_load_minhash_verify_tier(spark, store),
+            candidate_pushdown=candidate_pushdown),
+        tiers=lambda store: [_corpus_tier(corpus_path),
+                             _verify_tier(index_path)],
+        index_rows=_minhash_rows_for_store)
 
 
 def start_dedup_maintenance_stream(docs_stream: DataFrame,
@@ -2143,43 +2216,27 @@ def start_dedup_maintenance_stream(docs_stream: DataFrame,
     are validated here before the stream starts). Once the index
     sits at the target geometry the check never rebuilds again
     (bounded by construction), and replayed triggers never check."""
-    if rebuild_check_every is not None:
-        if rebuild_check_every < 1:
-            raise ValueError(
-                f"rebuild_check_every must be >= 1, got "
-                f"{rebuild_check_every}")
-        kw = rebuild_kwargs or {}
-        if kw.get("rows_per_band") is None \
-                and kw.get("j_threshold") is None:
-            raise ValueError(
-                "rebuild_check_every needs a target geometry in "
-                "rebuild_kwargs: pass rows_per_band=... or "
-                "j_threshold=... (sized via "
-                "dedup.minhash_rows_for_threshold)")
-
-    def _proc(batch_df: DataFrame, batch_id: int) -> None:
-        with _trigger_shuffle_width(batch_df.sparkSession,
-                                    trigger_shuffle_partitions):
-            committed = apply_dedup_maintenance_batch(
-                batch_df.sparkSession, batch_df, batch_id,
-                corpus_path, index_path, compact_every,
-                stream_token=checkpoint_dir,
-                candidate_pushdown=candidate_pushdown,
-                compact_mode=compact_mode)
-            if (rebuild_check_every is not None and committed
-                    and batch_id > 0
-                    and batch_id % rebuild_check_every == 0):
-                run_minhash_rebuild_check(
-                    batch_df.sparkSession, index_path,
-                    record_batch=batch_id, **(rebuild_kwargs or {}))
-
-    writer = (docs_stream.writeStream.foreachBatch(_proc)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    kw = rebuild_kwargs or {}
+    hook = _every_committed(
+        rebuild_check_every, "rebuild_check_every",
+        lambda spark, bid: run_minhash_rebuild_check(
+            spark, index_path, record_batch=bid, **kw))
+    if (hook is not None and kw.get("rows_per_band") is None
+            and kw.get("j_threshold") is None):
+        raise ValueError(
+            "rebuild_check_every needs a target geometry in "
+            "rebuild_kwargs: pass rows_per_band=... or "
+            "j_threshold=... (sized via "
+            "dedup.minhash_rows_for_threshold)")
+    return _start_maintenance_stream(
+        docs_stream, checkpoint_dir,
+        lambda spark, df, bid: apply_dedup_maintenance_batch(
+            spark, df, bid, corpus_path, index_path, compact_every,
+            stream_token=checkpoint_dir,
+            candidate_pushdown=candidate_pushdown,
+            compact_mode=compact_mode),
+        available_now, processing_time, compact_mode,
+        trigger_shuffle_partitions, post_commit=hook)
 
 
 def apply_substring_maintenance_batch(spark: SparkSession,
@@ -2199,28 +2256,16 @@ def apply_substring_maintenance_batch(spark: SparkSession,
     protocol; note the per-trigger step never reads the seen corpus
     (the fingerprint index is the complete seen state), so corpus
     dirs are write-only until :func:`load_maintained_corpus`."""
-    store = open_dedup_index(index_path)
-    store._require("substring")
-    _check_stream_token(store, stream_token)
-    if batch_id <= store.meta.get("last_stream_batch", -1):
-        return False
-    corpus_batches = list(store.meta.get("corpus_batches", []))
-    surv = substring_incremental_survivors_indexed(
-        store, batch_df.select("doc_id", "text"),
-        max_dup_frac=max_dup_frac, commit=False)
-    surv = surv.localCheckpoint()
-    cname = f"batch={batch_id}"
-    surv.write.mode("overwrite").parquet(_join(corpus_path, cname))
-    meta = {"last_stream_batch": batch_id,
-            "corpus_batches": corpus_batches + [cname]}
-    if stream_token is not None:
-        meta["stream_token"] = stream_token
-    store.append(substring_index_rows(surv, store.params["k"],
-                                      store.params["w"]),
-                 meta_update=meta)
-    _run_compaction(spark, store, compact_every, compact_mode, [
-        (corpus_path, "corpus_batches", "corpus_compact_seq", "doc_id")])
-    return True
+    return _maintenance_step(
+        spark, index_path, batch_id, stream_token, compact_every,
+        compact_mode,
+        guard=lambda store: store._require("substring"),
+        survivors=lambda store: substring_incremental_survivors_indexed(
+            store, batch_df.select("doc_id", "text"),
+            max_dup_frac=max_dup_frac, commit=False),
+        tiers=lambda store: [_corpus_tier(corpus_path)],
+        index_rows=lambda store, surv: substring_index_rows(
+            surv, store.params["k"], store.params["w"]))
 
 
 def start_substring_maintenance_stream(docs_stream: DataFrame,
@@ -2239,21 +2284,14 @@ def start_substring_maintenance_stream(docs_stream: DataFrame,
     ``trigger_shuffle_partitions`` knobs; the drop criterion here is
     winnowed verbatim-span coverage > ``max_dup_frac`` against the
     committed fingerprint index."""
-    def _proc(batch_df: DataFrame, batch_id: int) -> None:
-        with _trigger_shuffle_width(batch_df.sparkSession,
-                                    trigger_shuffle_partitions):
-            apply_substring_maintenance_batch(
-                batch_df.sparkSession, batch_df, batch_id,
-                corpus_path, index_path, max_dup_frac, compact_every,
-                stream_token=checkpoint_dir, compact_mode=compact_mode)
-
-    writer = (docs_stream.writeStream.foreachBatch(_proc)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return _start_maintenance_stream(
+        docs_stream, checkpoint_dir,
+        lambda spark, df, bid: apply_substring_maintenance_batch(
+            spark, df, bid, corpus_path, index_path, max_dup_frac,
+            compact_every, stream_token=checkpoint_dir,
+            compact_mode=compact_mode),
+        available_now, processing_time, compact_mode,
+        trigger_shuffle_partitions)
 
 
 def apply_curation_maintenance_batch(spark: SparkSession,
@@ -2293,57 +2331,42 @@ def apply_curation_maintenance_batch(spark: SparkSession,
     + the hashed-shingle verify tier — all NARROW; the wide survivors
     corpus is write-only (VERDICT r14 item 1), and the MinHash verify
     reads the tier committed in the same single-authority publish."""
-    store = open_dedup_index(index_path)
-    _minhash_geometry(store)       # kind + basis-aware geometry guard
-    _check_stream_token(store, stream_token)
-    rec_k = store.meta.get("substring_k")
-    rec_w = store.meta.get("substring_w")
-    if rec_k is not None and (rec_k, rec_w) != (k, w):
-        raise ValueError(
-            f"curation loop at {index_path!r} committed fingerprints "
-            f"under (k={rec_k}, w={rec_w}); probing with (k={k}, "
-            f"w={w}) would silently match nothing")
-    if batch_id <= store.meta.get("last_stream_batch", -1):
-        return False
-    corpus_batches = list(store.meta.get("corpus_batches", []))
-    fp_batches = list(store.meta.get("fp_batches", []))
-    verify_batches = list(store.meta.get("verify_batches", []))
-    seen_verify = _load_minhash_verify_tier(spark, store)
-    if fp_batches:
-        seen_fps = (spark.read.parquet(
-            *[_join(fp_path, b) for b in fp_batches])
-            .select("fp").distinct())
-    else:
-        seen_fps = spark.createDataFrame([], "fp long")
+    def guard(store: DedupIndexStore) -> None:
+        _minhash_geometry(store)   # kind + basis-aware geometry guard
+        rec_k = store.meta.get("substring_k")
+        rec_w = store.meta.get("substring_w")
+        if rec_k is not None and (rec_k, rec_w) != (k, w):
+            raise ValueError(
+                f"curation loop at {index_path!r} committed fingerprints "
+                f"under (k={rec_k}, w={rec_w}); probing with (k={k}, "
+                f"w={w}) would silently match nothing")
 
-    batch = batch_df.select("doc_id", "text")
-    s1 = _substring_survivors_against(batch, seen_fps, k, w,
-                                      max_dup_frac)
-    surv = dedup_incremental_survivors_indexed(
-        store, s1, commit=False, seen_verify=seen_verify,
-        candidate_pushdown=candidate_pushdown)
-    surv = surv.localCheckpoint()
-    cname = f"batch={batch_id}"
-    surv.write.mode("overwrite").parquet(_join(corpus_path, cname))
-    (substring_index_rows(surv, k, w)
-     .write.mode("overwrite").parquet(_join(fp_path, cname)))
-    vname = f"verify={batch_id}"
-    (minhash_verify_rows(surv).sortWithinPartitions("doc_id")
-     .write.mode("overwrite").parquet(_join(index_path, vname)))
-    meta = {"last_stream_batch": batch_id,
-            "corpus_batches": corpus_batches + [cname],
-            "fp_batches": fp_batches + [cname],
-            "verify_batches": verify_batches + [vname],
-            "substring_k": k, "substring_w": w}
-    if stream_token is not None:
-        meta["stream_token"] = stream_token
-    store.append(_minhash_rows_for_store(store, surv),
-                 meta_update=meta)
-    _run_compaction(spark, store, compact_every, compact_mode, [
-        (corpus_path, "corpus_batches", "corpus_compact_seq", "doc_id"),
-        (fp_path, "fp_batches", "fp_compact_seq", None),
-        (index_path, "verify_batches", "verify_compact_seq", "doc_id")])
-    return True
+    def survivors(store: DedupIndexStore) -> DataFrame:
+        seen_verify = _load_minhash_verify_tier(spark, store)
+        fp_batches = store.meta.get("fp_batches", [])
+        if fp_batches:
+            seen_fps = (spark.read.parquet(
+                *[_join(fp_path, b) for b in fp_batches])
+                .select("fp").distinct())
+        else:
+            seen_fps = spark.createDataFrame([], "fp long")
+        s1 = _substring_survivors_against(
+            batch_df.select("doc_id", "text"), seen_fps, k, w,
+            max_dup_frac)
+        return dedup_incremental_survivors_indexed(
+            store, s1, commit=False, seen_verify=seen_verify,
+            candidate_pushdown=candidate_pushdown)
+
+    return _maintenance_step(
+        spark, index_path, batch_id, stream_token, compact_every,
+        compact_mode, guard=guard, survivors=survivors,
+        tiers=lambda store: [
+            _corpus_tier(corpus_path),
+            _Tier(fp_path, "fp_batches", "fp_compact_seq", None,
+                  lambda s: substring_index_rows(s, k, w)),
+            _verify_tier(index_path)],
+        index_rows=_minhash_rows_for_store,
+        meta=lambda store: {"substring_k": k, "substring_w": w})
 
 
 def start_curation_maintenance_stream(docs_stream: DataFrame,
@@ -2364,23 +2387,16 @@ def start_curation_maintenance_stream(docs_stream: DataFrame,
     :func:`apply_curation_maintenance_batch` for the single-authority
     commit protocol and :func:`start_dedup_maintenance_stream` for the
     checkpoint-pairing contract and the knobs."""
-    def _proc(batch_df: DataFrame, batch_id: int) -> None:
-        with _trigger_shuffle_width(batch_df.sparkSession,
-                                    trigger_shuffle_partitions):
-            apply_curation_maintenance_batch(
-                batch_df.sparkSession, batch_df, batch_id,
-                corpus_path, index_path, fp_path, max_dup_frac, k, w,
-                compact_every, stream_token=checkpoint_dir,
-                candidate_pushdown=candidate_pushdown,
-                compact_mode=compact_mode)
-
-    writer = (docs_stream.writeStream.foreachBatch(_proc)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return _start_maintenance_stream(
+        docs_stream, checkpoint_dir,
+        lambda spark, df, bid: apply_curation_maintenance_batch(
+            spark, df, bid, corpus_path, index_path, fp_path,
+            max_dup_frac, k, w, compact_every,
+            stream_token=checkpoint_dir,
+            candidate_pushdown=candidate_pushdown,
+            compact_mode=compact_mode),
+        available_now, processing_time, compact_mode,
+        trigger_shuffle_partitions)
 
 
 def apply_embedding_maintenance_batch(spark: SparkSession,
@@ -2394,8 +2410,7 @@ def apply_embedding_maintenance_batch(spark: SparkSession,
                                       compact_mode: str = "full",
                                       keep_float_tier: bool = False) -> bool:
     """Embedding analog of :func:`apply_dedup_maintenance_batch` —
-    same idempotent commit protocol (batch-id corpus dir overwrite,
-    then ONE atomic manifest publish of index rows + meta); the
+    same idempotent commit protocol (:func:`_maintenance_step`); the
     per-batch step is :func:`embedding_incremental_survivors_indexed`
     (banded bucket probe against the index, batch-scaled multi-band
     within-batch resolve).
@@ -2429,76 +2444,48 @@ def apply_embedding_maintenance_batch(spark: SparkSession,
     the 8x tier size. Pinned in the manifest like
     ``corpus_quantized``; compaction and vacuum treat the tier as one
     more manifest-listed dir family."""
+    from pyspark.sql import Observation
+
     from .similarity import quantize_embeddings_int8
 
-    store = open_dedup_index(index_path)
-    store._require("embedding")
-    _check_stream_token(store, stream_token)
-    recorded_q = store.meta.get("corpus_quantized")
-    if recorded_q is not None and bool(quantize_corpus) != recorded_q:
-        raise ValueError(
-            f"embedding corpus at {corpus_path!r} is committed with "
-            f"corpus_quantized={recorded_q}; driving the loop with "
-            f"quantize_corpus={bool(quantize_corpus)} would mix int8 "
-            "and float batch schemas in one manifest")
-    if keep_float_tier and not quantize_corpus:
-        raise ValueError(
-            "keep_float_tier=True only applies to quantize_corpus="
-            "True loops: a float survivors corpus already IS the "
-            "full-precision tier — rerank against it directly")
-    recorded_f = store.meta.get("float_tier")
-    if recorded_f is None and store.meta.get("corpus_batches"):
-        # Legacy manifest (pre-float-tier code): batches are committed
-        # but the float_tier key was never pinned. Those batches have
-        # no sidecar rows, so they behave as float_tier=False — letting
-        # keep_float_tier=True through would commit a tier covering
-        # only NEW batches, and _exact_rerank's inner join would
-        # silently drop candidates from the old ones (under-k results).
-        recorded_f = False
-    if recorded_f is not None and bool(keep_float_tier) != recorded_f:
-        raise ValueError(
-            f"embedding corpus at {corpus_path!r} is committed with "
-            f"float_tier={recorded_f}; driving the loop with "
-            f"keep_float_tier={bool(keep_float_tier)} would leave the "
-            "re-rank tier covering only part of the corpus — a "
-            "silent under-return at serving time")
-    if batch_id <= store.meta.get("last_stream_batch", -1):
-        return False
-    corpus_batches = list(store.meta.get("corpus_batches", []))
-    if corpus_batches:
-        seen_emb = spark.read.parquet(
-            *[_join(corpus_path, b) for b in corpus_batches])
-    elif quantize_corpus:
-        seen_emb = spark.createDataFrame(
-            [], "vec_id long, scale double, q array<tinyint>")
-    else:
-        seen_emb = spark.createDataFrame(
-            [], "vec_id long, embedding array<double>")
-    surv = embedding_incremental_survivors_indexed(
-        store, batch_df.select("vec_id", "embedding"), seen_emb,
-        tau=tau, commit=False, seen_quantized=bool(quantize_corpus),
-        candidate_pushdown=candidate_pushdown)
-    surv = surv.localCheckpoint()
-    cname = f"batch={batch_id}"
-    centroids = store.params.get("ivf_centroids")
-    if centroids:
-        # IVF serving tier (r16): stamp each survivor's
-        # nearest-centroid cell onto the corpus rows and keep those
-        # writes (cell, vec_id)-clustered so the serving probe's cell
-        # isin prunes row groups. (The float re-rank tier stays
-        # vec_id-clustered only — the re-rank joins by vec_id, never
-        # by cell, so stamping it would buy nothing.)
-        cells = _assign_ivf_cells(surv, centroids)
-        order = ["cell", "vec_id"]
-    else:
-        cells = None
-        order = ["vec_id"]
+    def guard(store: DedupIndexStore) -> None:
+        store._require("embedding")
+        recorded_q = store.meta.get("corpus_quantized")
+        if recorded_q is not None and bool(quantize_corpus) != recorded_q:
+            raise ValueError(
+                f"embedding corpus at {corpus_path!r} is committed with "
+                f"corpus_quantized={recorded_q}; driving the loop with "
+                f"quantize_corpus={bool(quantize_corpus)} would mix int8 "
+                "and float batch schemas in one manifest")
+        if keep_float_tier and not quantize_corpus:
+            raise ValueError(
+                "keep_float_tier=True only applies to quantize_corpus="
+                "True loops: a float survivors corpus already IS the "
+                "full-precision tier — rerank against it directly")
+        recorded_f = store.meta.get("float_tier")
+        if recorded_f is not None and bool(keep_float_tier) != recorded_f:
+            raise ValueError(
+                f"embedding corpus at {corpus_path!r} is committed with "
+                f"float_tier={recorded_f}; driving the loop with "
+                f"keep_float_tier={bool(keep_float_tier)} would leave "
+                "the re-rank tier covering only part of the corpus — a "
+                "silent under-return at serving time")
 
-    def _with_cell(df):
-        return df.join(cells, "vec_id") if cells is not None else df
+    def survivors(store: DedupIndexStore) -> DataFrame:
+        batches = store.meta.get("corpus_batches", [])
+        if batches:
+            seen_emb = spark.read.parquet(
+                *[_join(corpus_path, b) for b in batches])
+        else:
+            seen_emb = spark.createDataFrame([], (
+                "vec_id long, scale double, q array<tinyint>"
+                if quantize_corpus
+                else "vec_id long, embedding array<double>"))
+        return embedding_incremental_survivors_indexed(
+            store, batch_df.select("vec_id", "embedding"), seen_emb,
+            tau=tau, commit=False, seen_quantized=bool(quantize_corpus),
+            candidate_pushdown=candidate_pushdown)
 
-    out = quantize_embeddings_int8(surv) if quantize_corpus else surv
-    towrite = _with_cell(out)
     # per-trigger telemetry riding the corpus write (VERDICT r16
     # item 2): a FREE observation — a separate groupBy job measured
     # 0.74 s/trigger, a ~25% tax on the ~2.5 s trigger floor
@@ -2506,64 +2493,69 @@ def apply_embedding_maintenance_batch(spark: SparkSession,
     # row-level observation can compute (rows + approx-distinct cells
     # hit; exact at trigger-sized cardinalities) and the exact
     # histogram / max-share skew stays ivf_cell_occupancy /
-    # ivf_refit_advice's on-demand job. Latest trigger only for the
-    # occupancy record — a full history would grow the manifest
-    # unboundedly; the ROWS term additionally accumulates into
-    # corpus_seen_rows, the manifest-resident corpus size
-    # method='auto' serving reads for free (r18).
-    from pyspark.sql import Observation
+    # ivf_refit_advice's on-demand job.
     obs = Observation()
-    aggs = [F.count(F.lit(1)).alias("rows")]
-    if cells is not None:
-        aggs.append(F.approx_count_distinct("cell").alias("cells_hit"))
-    towrite = towrite.observe(obs, *aggs)
-    (towrite.sortWithinPartitions(*order)
-     .write.mode("overwrite").parquet(_join(corpus_path, cname)))
-    meta = {"last_stream_batch": batch_id,
-            "corpus_batches": corpus_batches + [cname],
-            "corpus_quantized": bool(quantize_corpus),
-            "float_tier": bool(keep_float_tier)}
-    got = obs.get
-    n_written = int(got["rows"] or 0)
-    prior_rows = store.meta.get("corpus_seen_rows")
-    if prior_rows is not None or not corpus_batches:
-        # accumulate only when the running total is trustworthy: the
-        # field exists, or this is the corpus' FIRST batch. A corpus
-        # whose early batches predate the field would otherwise carry
-        # a silent under-count — serving's auto resolver falls back
-        # to one cached count job for those instead.
-        meta["corpus_seen_rows"] = int(prior_rows or 0) + n_written
-    if cells is not None:
-        meta["ivf_occupancy"] = {
-            "batch": batch_id,
-            "cells_hit": int(got["cells_hit"] or 0),
-            "rows": n_written,
-            "n_cells": len(centroids)}
-    if keep_float_tier:
-        # full-precision re-rank sidecar: data lands BEFORE the
-        # manifest swap below (same crash recipe as the corpus batch —
-        # an orphan from a crash in between is overwritten on replay);
-        # id-sorted so the serving re-rank's candidate pushdown prunes
-        # to candidate row groups
-        (surv.sortWithinPartitions("vec_id")
-         .write.mode("overwrite")
-         .parquet(_join(float_tier_path(corpus_path), cname)))
-        meta["float_batches"] = list(
-            store.meta.get("float_batches", [])) + [cname]
-    if stream_token is not None:
-        meta["stream_token"] = stream_token
-    store.append(
-        embedding_index_rows(surv, _embedding_n_bands(store),
-                             store.params["n_planes"],
-                             width=store.params.get("width")),
-        meta_update=meta)
-    families = [
-        (corpus_path, "corpus_batches", "corpus_compact_seq", order)]
-    if keep_float_tier:
-        families.append((float_tier_path(corpus_path), "float_batches",
-                         "float_compact_seq", "vec_id"))
-    _run_compaction(spark, store, compact_every, compact_mode, families)
-    return True
+
+    def tiers(store: DedupIndexStore) -> list:
+        centroids = store.params.get("ivf_centroids")
+        # IVF serving tier (r16): each survivor's nearest-centroid cell
+        # is stamped onto the corpus rows, kept (cell, vec_id)-clustered
+        # so the serving probe's cell isin prunes row groups. (The
+        # float re-rank tier stays vec_id-clustered only — the re-rank
+        # joins by vec_id, never by cell.)
+        order = ["cell", "vec_id"] if centroids else ["vec_id"]
+
+        def corpus_rows(surv: DataFrame) -> DataFrame:
+            out = quantize_embeddings_int8(surv) if quantize_corpus \
+                else surv
+            aggs = [F.count(F.lit(1)).alias("rows")]
+            if centroids:
+                out = out.join(_assign_ivf_cells(surv, centroids),
+                               "vec_id")
+                aggs.append(
+                    F.approx_count_distinct("cell").alias("cells_hit"))
+            return out.observe(obs, *aggs).sortWithinPartitions(*order)
+
+        out = [_corpus_tier(corpus_path, order, corpus_rows)]
+        if keep_float_tier:
+            # full-precision re-rank sidecar, id-sorted so the serving
+            # re-rank's candidate pushdown prunes to candidate row groups
+            out.append(_Tier(float_tier_path(corpus_path), "float_batches",
+                             "float_compact_seq", "vec_id",
+                             lambda s: s.sortWithinPartitions("vec_id")))
+        return out
+
+    def meta(store: DedupIndexStore) -> dict:
+        got = obs.get
+        n_written = int(got["rows"] or 0)
+        out = {"corpus_quantized": bool(quantize_corpus),
+               "float_tier": bool(keep_float_tier)}
+        # the ROWS term accumulates into corpus_seen_rows, the
+        # manifest-resident corpus size method='auto' serving reads
+        # for free (r18) — only while the running total is
+        # trustworthy: the field exists, or this is the corpus' FIRST
+        # batch (serving falls back to one cached count job otherwise)
+        prior_rows = store.meta.get("corpus_seen_rows")
+        if prior_rows is not None or not store.meta.get("corpus_batches"):
+            out["corpus_seen_rows"] = int(prior_rows or 0) + n_written
+        centroids = store.params.get("ivf_centroids")
+        if centroids:
+            # latest trigger only — a full history would grow the
+            # manifest unboundedly
+            out["ivf_occupancy"] = {
+                "batch": batch_id,
+                "cells_hit": int(got["cells_hit"] or 0),
+                "rows": n_written,
+                "n_cells": len(centroids)}
+        return out
+
+    return _maintenance_step(
+        spark, index_path, batch_id, stream_token, compact_every,
+        compact_mode, guard=guard, survivors=survivors, tiers=tiers,
+        index_rows=lambda store, surv: embedding_index_rows(
+            surv, _embedding_n_bands(store), store.params["n_planes"],
+            width=store.params.get("width")),
+        meta=meta)
 
 
 def start_embedding_maintenance_stream(emb_stream: DataFrame,
@@ -2602,40 +2594,26 @@ def start_embedding_maintenance_stream(emb_stream: DataFrame,
     lifecycle test proves refit-under-live-serving). Requires the
     index to pin ``ivf_centroids`` — validated here, loudly, before
     the stream starts."""
-    if refit_check_every is not None:
-        if refit_check_every < 1:
-            raise ValueError(
-                f"refit_check_every must be >= 1, got "
-                f"{refit_check_every}")
-        if not open_dedup_index(index_path).params.get("ivf_centroids"):
-            raise ValueError(
-                f"refit_check_every needs the embedding index at "
-                f"{index_path!r} to pin ivf_centroids "
-                "(create_embedding_index(..., ivf_centroids=...)) — "
-                "there is no quantizer to refit")
-
-    def _proc(batch_df: DataFrame, batch_id: int) -> None:
-        with _trigger_shuffle_width(batch_df.sparkSession,
-                                    trigger_shuffle_partitions):
-            committed = apply_embedding_maintenance_batch(
-                batch_df.sparkSession, batch_df, batch_id,
-                corpus_path, index_path, tau, compact_every,
-                stream_token=checkpoint_dir,
-                quantize_corpus=quantize_corpus,
-                candidate_pushdown=candidate_pushdown,
-                compact_mode=compact_mode,
-                keep_float_tier=keep_float_tier)
-            if (refit_check_every is not None and committed
-                    and batch_id > 0
-                    and batch_id % refit_check_every == 0):
-                run_ivf_refit_check(
-                    batch_df.sparkSession, corpus_path, index_path,
-                    record_batch=batch_id, **(refit_kwargs or {}))
-
-    writer = (emb_stream.writeStream.foreachBatch(_proc)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    hook = _every_committed(
+        refit_check_every, "refit_check_every",
+        lambda spark, bid: run_ivf_refit_check(
+            spark, corpus_path, index_path, record_batch=bid,
+            **(refit_kwargs or {})))
+    if hook is not None and not open_dedup_index(
+            index_path).params.get("ivf_centroids"):
+        raise ValueError(
+            f"refit_check_every needs the embedding index at "
+            f"{index_path!r} to pin ivf_centroids "
+            "(create_embedding_index(..., ivf_centroids=...)) — "
+            "there is no quantizer to refit")
+    return _start_maintenance_stream(
+        emb_stream, checkpoint_dir,
+        lambda spark, df, bid: apply_embedding_maintenance_batch(
+            spark, df, bid, corpus_path, index_path, tau, compact_every,
+            stream_token=checkpoint_dir,
+            quantize_corpus=quantize_corpus,
+            candidate_pushdown=candidate_pushdown,
+            compact_mode=compact_mode,
+            keep_float_tier=keep_float_tier),
+        available_now, processing_time, compact_mode,
+        trigger_shuffle_partitions, post_commit=hook)

@@ -272,6 +272,31 @@ def test_store_parameter_guards(spark, tmp_path):
     assert emb.load(spark).count() == 0
     assert set(emb.load(spark).columns) == {"vec_id", "band_idx",
                                             "bucket", "nrm"}
+    # a mistyped compact_mode is refused before the trigger writes or
+    # commits anything (with or without compaction due), and before a
+    # maintenance stream starts
+    from solana_event_stream_spark.operators.dedup_index import (
+        apply_dedup_maintenance_batch, start_dedup_maintenance_stream)
+    docs = spark.createDataFrame([(1, "alpha bravo charlie delta echo")],
+                                 "doc_id long, text string")
+    cdir, idir = str(tmp_path / "c"), str(tmp_path / "m")
+    create_minhash_index(idir)
+    assert apply_dedup_maintenance_batch(spark, docs, 0, cdir, idir)
+    for every in (1, None):
+        with pytest.raises(ValueError, match="compact_mode"):
+            apply_dedup_maintenance_batch(
+                spark, docs, 1, cdir, idir, compact_every=every,
+                compact_mode="tierd")
+        st = open_dedup_index(idir)
+        assert st.meta["last_stream_batch"] == 0
+        assert st.meta["corpus_batches"] == ["batch=0"]
+    (tmp_path / "in").mkdir()
+    stream = (spark.readStream.schema("doc_id long, text string")
+              .parquet(str(tmp_path / "in")))
+    with pytest.raises(ValueError, match="compact_mode"):
+        start_dedup_maintenance_stream(
+            stream, cdir, idir, str(tmp_path / "ck"),
+            compact_mode="tierd")
 
 
 def test_store_orphan_batch_is_invisible_then_overwritten(
@@ -1068,55 +1093,122 @@ def test_curation_maintenance_composes_both_gates(spark, tmp_path):
             k=32, w=4)
 
 
-def test_curation_maintenance_crash_replay_single_authority(
-        spark, tmp_path, monkeypatch):
-    """THE case the single-commit-point design exists for: a crash
-    after the corpus + fingerprint dirs land but BEFORE the manifest
-    publish leaves only invisible orphans — the replay recomputes the
-    trigger against pre-crash state and commits the SAME survivors a
-    never-crashed run would. (Two chained stores would have committed
-    the batch's own fingerprints at the crash point, and the replay's
-    stage-1 probe would dedup the batch against itself to nothing.)"""
+def _crash_replay_loop(spark, name, tmp_path):
+    """(apply(batch_df, batch_id), batches, id column, the tier dirs a
+    trigger-1 crash leaves behind, corpus dir, index dir) for one
+    maintenance loop."""
+    import os
+
     from solana_event_stream_spark.operators import dedup_index as di
 
-    batches = _curation_batches()
-    cdir = str(tmp_path / "c")
-    idir = str(tmp_path / "i")
-    fdir = str(tmp_path / "f")
-    di.create_minhash_index(idir)
-    b0 = spark.createDataFrame(batches[0], "doc_id long, text string")
-    assert di.apply_curation_maintenance_batch(
-        spark, b0, 0, cdir, idir, fdir, k=16, w=4)
+    cdir, idir, fdir = (str(tmp_path / "c"), str(tmp_path / "i"),
+                        str(tmp_path / "f"))
+    docs = [spark.createDataFrame(b, "doc_id long, text string")
+            for b in _curation_batches()]
+    if name == "minhash":
+        di.create_minhash_index(idir)
+        return (lambda df, bid: di.apply_dedup_maintenance_batch(
+                    spark, df, bid, cdir, idir),
+                docs, "doc_id",
+                [os.path.join(cdir, "batch=1"),
+                 os.path.join(idir, "verify=1")], cdir, idir)
+    if name == "substring":
+        di.create_substring_index(idir, k=16, w=4)
+        return (lambda df, bid: di.apply_substring_maintenance_batch(
+                    spark, df, bid, cdir, idir),
+                docs, "doc_id", [os.path.join(cdir, "batch=1")],
+                cdir, idir)
+    if name == "curation":
+        di.create_minhash_index(idir)
+        return (lambda df, bid: di.apply_curation_maintenance_batch(
+                    spark, df, bid, cdir, idir, fdir, k=16, w=4),
+                docs, "doc_id",
+                [os.path.join(cdir, "batch=1"),
+                 os.path.join(fdir, "batch=1"),
+                 os.path.join(idir, "verify=1")], cdir, idir)
+    di.create_embedding_index(idir, n_planes=6, width=8, n_bands=2)
+    schema = "vec_id long, embedding array<double>"
+    embs = [spark.createDataFrame([(i, _vec(i)) for i in range(12)],
+                                  schema),
+            # 200 repeats vector 3 exactly: dropped against the corpus
+            spark.createDataFrame([(100 + i, _vec(100 + i))
+                                   for i in range(4)]
+                                  + [(200, _vec(3))], schema)]
+    return (lambda df, bid: di.apply_embedding_maintenance_batch(
+                spark, df, bid, cdir, idir, quantize_corpus=True,
+                keep_float_tier=True),
+            embs, "vec_id",
+            [os.path.join(cdir, "batch=1"),
+             os.path.join(di.float_tier_path(cdir), "batch=1")],
+            cdir, idir)
 
-    # crash simulation: the publish (store.append) raises AFTER the
-    # corpus and fingerprint dirs are written
-    real_append = di.DedupIndexStore.append
 
+def _committed_state(spark, cdir, idir, id_col):
+    from solana_event_stream_spark.operators import dedup_index as di
+
+    st = di.open_dedup_index(idir)
+    lists = {k: st.meta.get(k) for k in (
+        "last_stream_batch", "corpus_batches", "verify_batches",
+        "fp_batches", "float_batches")}
+    lists["index_batches"] = list(st._batches)
+    surv = sorted(r[0] for r in di.load_maintained_corpus(
+        spark, cdir, idir).select(id_col).collect())
+    return surv, lists
+
+
+@pytest.mark.parametrize("loop", ["minhash", "substring", "curation",
+                                  "embedding"])
+def test_maintenance_crash_replay_single_authority(
+        spark, tmp_path, monkeypatch, loop):
+    """THE case the single-commit-point design exists for, on every
+    maintenance loop: a crash after the trigger's tier dirs land but
+    BEFORE the manifest publish leaves only invisible orphans — the
+    replay recomputes the trigger against pre-crash state and commits
+    the SAME survivors and tier lists a never-crashed run would. (Two
+    chained stores would have committed the batch's own features at
+    the crash point, and the replay's probe would dedup the batch
+    against itself to nothing.)"""
+    import os
+
+    from solana_event_stream_spark.operators import dedup_index as di
+
+    apply, batches, id_col, _, cref, iref = _crash_replay_loop(
+        spark, loop, tmp_path / "ref")
+    for bid, df in enumerate(batches):
+        assert apply(df, bid)
+    want = _committed_state(spark, cref, iref, id_col)
+    # the second batch must lose something, or a replay that deduped
+    # itself to nothing could not be told from a correct one
+    assert len(want[0]) < sum(df.count() for df in batches)
+
+    apply, batches, id_col, orphans, cdir, idir = _crash_replay_loop(
+        spark, loop, tmp_path / "run")
+    assert apply(batches[0], 0)
+
+    # crash simulation: the publish (store.append) raises AFTER every
+    # tier dir is written
     def boom(self, *a, **kw):
         raise RuntimeError("simulated crash before manifest publish")
 
-    b1 = spark.createDataFrame(batches[1], "doc_id long, text string")
     with monkeypatch.context() as m:
         m.setattr(di.DedupIndexStore, "append", boom)
         with pytest.raises(RuntimeError, match="simulated crash"):
-            di.apply_curation_maintenance_batch(
-                spark, b1, 1, cdir, idir, fdir, k=16, w=4)
-    import os
-    assert os.path.isdir(os.path.join(cdir, "batch=1"))   # orphans...
-    assert os.path.isdir(os.path.join(fdir, "batch=1"))
+            apply(batches[1], 1)
+    for d in orphans:                                     # orphans...
+        assert os.path.isdir(d), d
     st = di.open_dedup_index(idir)
     assert st.meta["last_stream_batch"] == 0              # ...invisible
     assert st.meta["corpus_batches"] == ["batch=0"]
 
-    # replay: commits batch 1 with the same survivors as no-crash
-    assert di.apply_curation_maintenance_batch(
-        spark, b1, 1, cdir, idir, fdir, k=16, w=4)
-    got = sorted(r.doc_id for r in di.load_maintained_corpus(
-        spark, cdir, idir).collect())
-    assert got == [1, 2, 13]
+    # replay: commits batch 1 with the same survivors and tier lists
+    # as the never-crashed run
+    assert apply(batches[1], 1)
+    assert _committed_state(spark, cdir, idir, id_col) == want
+    if loop == "curation":
+        # 11 substring-dropped, 12 minhash-dropped
+        assert want[0] == [1, 2, 13]
     # and a second replay of the committed batch is a no-op
-    assert not di.apply_curation_maintenance_batch(
-        spark, b1, 1, cdir, idir, fdir, k=16, w=4)
+    assert not apply(batches[1], 1)
 
 
 # ---------------------------------------------------------------------------
@@ -1198,13 +1290,13 @@ def test_maintenance_loop_never_reads_seen_text(spark, tmp_path):
     assert st.meta["verify_batches"] == ["verify=0", "verify=1"]
 
 
-def test_pre_r15_manifest_requires_backfill(spark, tmp_path):
+def test_pre_r15_manifest_without_verify_tier_is_loud(spark, tmp_path):
     """A manifest with corpus batches but no verify tier (pre-r15)
-    must be a loud error, and the one-time backfill must restore the
-    loop with identical decisions."""
+    must be a loud error, never a silent fallback to the wide corpus
+    scan, and it must commit nothing."""
     from solana_event_stream_spark.operators.dedup_index import (
-        apply_dedup_maintenance_batch, backfill_minhash_verify_tier,
-        create_minhash_index, open_dedup_index)
+        apply_dedup_maintenance_batch, create_minhash_index,
+        open_dedup_index)
 
     base = ("alpha bravo charlie delta echo foxtrot golf hotel india "
             "juliet kilo lima mike november oscar papa")
@@ -1220,16 +1312,11 @@ def test_pre_r15_manifest_requires_backfill(spark, tmp_path):
     st = open_dedup_index(idir)
     del st.meta["verify_batches"]
     st._write_manifest()
-    with pytest.raises(ValueError, match="backfill"):
+    with pytest.raises(ValueError, match="no verify tier"):
         apply_dedup_maintenance_batch(
             spark, spark.createDataFrame(b1, "doc_id long, text string"),
             1, cdir, idir)
-    assert backfill_minhash_verify_tier(spark, cdir, idir) == "verify=0"
-    assert apply_dedup_maintenance_batch(
-        spark, spark.createDataFrame(b1, "doc_id long, text string"),
-        1, cdir, idir)
-    surv1 = spark.read.parquet(f"{cdir}/batch=1")
-    assert sorted(r.doc_id for r in surv1.collect()) == [12]
+    assert open_dedup_index(idir).meta["last_stream_batch"] == 0
 
 
 def test_substring_fp_counts_roundtrip_and_probe_equality(
@@ -2143,52 +2230,6 @@ def test_manual_corpus_compact_preserves_clustering(spark, tmp_path):
     ranges.sort()
     for (_, a_hi), (b_lo, _) in zip(ranges, ranges[1:]):
         assert a_hi <= b_lo                 # disjoint across files
-
-
-def test_float_tier_legacy_manifest_rejects_midlife_tier(spark,
-                                                         tmp_path):
-    """A pre-float-tier manifest (committed corpus batches but no
-    float_tier key — the pre-r16 layout; ADVICE r16) must behave as
-    float_tier=False: restarting the loop with keep_float_tier=True
-    raises loudly instead of committing a sidecar that covers only
-    NEW batches, whose inner join in the serving re-rank would
-    silently drop old-batch candidates (under-k results)."""
-    import json
-    import os
-
-    from solana_event_stream_spark.operators.dedup_index import (
-        apply_embedding_maintenance_batch, create_embedding_index)
-
-    emb = spark.createDataFrame([(i, _vec(i)) for i in range(10)],
-                                "vec_id long, embedding array<double>")
-    cdir, idir = str(tmp_path / "c"), str(tmp_path / "i")
-    create_embedding_index(idir, n_planes=6, width=8, n_bands=2)
-    assert apply_embedding_maintenance_batch(
-        spark, emb, 0, cdir, idir, quantize_corpus=True)
-    # strip the float_tier key to reproduce the legacy manifest shape
-    mpath = os.path.join(idir, "_INDEX_MANIFEST.json")
-    with open(mpath) as fh:
-        m = json.load(fh)
-    assert m["meta"].pop("float_tier") is False
-    with open(mpath, "w") as fh:
-        json.dump(m, fh)
-    emb2 = spark.createDataFrame(
-        [(100 + i, _vec(100 + i)) for i in range(5)],
-        "vec_id long, embedding array<double>")
-    with pytest.raises(ValueError, match="float_tier"):
-        apply_embedding_maintenance_batch(
-            spark, emb2, 1, cdir, idir, quantize_corpus=True,
-            keep_float_tier=True)
-    # continuing WITHOUT the tier still works (legacy == False)
-    assert apply_embedding_maintenance_batch(
-        spark, emb2, 1, cdir, idir, quantize_corpus=True)
-    # and a FRESH corpus (no committed batches, no key) may still opt
-    # in on its first commit
-    cdir2, idir2 = str(tmp_path / "c2"), str(tmp_path / "i2")
-    create_embedding_index(idir2, n_planes=6, width=8, n_bands=2)
-    assert apply_embedding_maintenance_batch(
-        spark, emb, 0, cdir2, idir2, quantize_corpus=True,
-        keep_float_tier=True)
 
 
 def test_ivf_refit_recovers_recall_after_drift(spark, tmp_path):
