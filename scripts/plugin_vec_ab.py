@@ -1,6 +1,6 @@
 """Plug-in vector-spec ingest-scale A/B (VERDICT r11 item 3 / r10
 item 7): an 8th protocol registered through `plugins.register_protocol`
-WITH `vector_specs`, decoded at the decode_ab corpus size, vectorized
+WITH `vector_specs`, decoded at ingest scale (470k tx), vectorized
 fast path vs per-row Python decoders — the measured half of the claim
 the r10/r11 differential tests already pin bit-for-bit.
 
@@ -10,7 +10,7 @@ follows to onboard a protocol the engine doesn't ship; registering
 `vector_specs` alongside the per-row decoders is what opts its rows
 into the mapInArrow batch decoder.
 
-Method = scripts/decode_ab.py: build decode_input ONCE to parquet so
+Method: build decode_input ONCE to parquet so
 both arms re-read identical bytes, then alternate vectorized=True/False
 runs of the SAME mapInArrow stage in one JVM, best-of-N (gVisor wall
 clocks swing; interleaving is the control), plus the in-process

@@ -60,8 +60,7 @@ def _bin_view(arr: pa.Array):
         raise TypeError(
             f"vectorized decode requires 32-bit-offset binary/string "
             f"columns, got {arr.type} — disable "
-            f"spark.sql.execution.arrow.useLargeVarTypes or force the "
-            f"per-row path (SES_SPARK_DECODE_VECTOR=0)")
+            f"spark.sql.execution.arrow.useLargeVarTypes")
     bufs = arr.buffers()
     offs = np.frombuffer(bufs[1], np.int32)[
         arr.offset:arr.offset + len(arr) + 1].astype(np.int64)

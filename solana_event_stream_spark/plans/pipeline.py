@@ -2,7 +2,7 @@
 DEX-event DataFrame (SURVEY §3.1 translated to a single narrow DataFrame
 DAG).
 
-Stage layout (no shuffle until user-level aggregation):
+Stage layout (no shuffle and no join anywhere):
 
   JVM (Catalyst, codegen, pushdown):
     F6 vote filter -> F2 has-any-program prefilter (arrays_overlap before
@@ -16,10 +16,11 @@ Stage layout (no shuffle until user-level aggregation):
   length-prefixed strings / option tags):
     P5/P6 decode, J1 CPI-scan+merge (intra-row: both sides come from the
     same transaction, merger_event.rs semantics), J2 swap-data look-ahead,
-    F7/F8/F9 guards.
-  JVM again:
-    J3 dev-flag window over signature, J4 bot compare, P11 swap-amount
-    fill.
+    F7/F8/F9 guards, then J3 dev flags per signature in the same worker
+    (a transaction's rows are contiguous in one partition, see
+    _with_dev_flags).
+  JVM again (row-local projections):
+    J4 bot compare, P11 swap-amount fill.
 
 Scale notes: every stage before/after the decode UDF is whole-stage
 codegen-able; the decode stage is Arrow-vectorized IO with per-row Python
@@ -32,7 +33,6 @@ repartition.
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 from pyspark.sql import DataFrame, functions as F
@@ -53,14 +53,8 @@ _PASSTHROUGH = ("signature", "slot", "transaction_index", "block_time",
                 "outer_index", "inner_index")
 
 
-# Vectorized fast path default (operators/decode_vec.py); per-row-only
-# is kept selectable for A/B measurement and as an escape hatch.
-_VECTOR_DECODE_DEFAULT = os.environ.get(
-    "SES_SPARK_DECODE_VECTOR", "1") != "0"
-
-
 def _decode_batches(iterator: Iterator, bot_wallet: str | None,
-                    vectorized: bool | None = None,
+                    vectorized: bool = True,
                     tables: dict | None = None):
     """mapInArrow body: decode matched instruction rows into event rows.
 
@@ -79,7 +73,7 @@ def _decode_batches(iterator: Iterator, bot_wallet: str | None,
     subset batch. Output assembly is shared (decode_vec.assemble_output)
     and restores exact input-row order, so both paths compose
     row-identically; `vectorized=False` forces everything through the
-    per-row path (A/B harness + escape hatch).
+    per-row path (the reference the tests compare the fast path to).
     """
     import numpy as np
     import pyarrow as pa
@@ -88,14 +82,13 @@ def _decode_batches(iterator: Iterator, bot_wallet: str | None,
 
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    use_vec = (_VECTOR_DECODE_DEFAULT if vectorized is None else vectorized)
     if tables is None:       # direct invocation (tests, per-row A/B):
         tables = _decode_tables()  # worker-module state, as pre-plugin
     out_schema = to_arrow_schema(tables["schema"])
     pass_set = set(_PASSTHROUGH)
 
     for batch in iterator:
-        if use_vec:
+        if vectorized:
             groups, slow = decode_batch_vectorized(
                 batch, specs=tables.get("vec_specs"),
                 merge_specs=tables["merge_specs"])
@@ -238,40 +231,137 @@ def _arrow_event_schema():
     return to_arrow_schema(EVENT_SCHEMA)
 
 
-# Event types whose decoded rows feed the J3 dev-address pools.
-_CREATE_EVENT_TYPES = ("PumpFunCreateToken", "PumpFunCreateV2Token",
-                       "BonkInitialize", "BonkInitializeV2",
-                       "BonkInitializeWithToken2022")
+# J3 event classes (core/event_parser.rs:674-693, 724-731): creates
+# register dev addresses under their signature, trades of the SAME
+# signature read them.
+_PF_CREATES = ("PumpFunCreateToken", "PumpFunCreateV2Token")
+_BONK_CREATES = ("BonkInitialize", "BonkInitializeV2",
+                 "BonkInitializeWithToken2022")
+_PF_TRADES = ("PumpFunBuy", "PumpFunSell")
+_BONK_TRADES = ("BonkBuyExactIn", "BonkBuyExactOut", "BonkSellExactIn",
+                "BonkSellExactOut")
+
+DEV_FLAG = "is_dev_create_token_trade"
+
+
+def _with_dev_flags(batches: Iterator):
+    """J3 over decoded event batches, in the decode worker: appends
+    ``is_dev_create_token_trade`` (True/False on PumpFun/Bonk trades,
+    NULL on every other row).
+
+    The reference's GlobalState map is keyed by signature and only read
+    by events of the same transaction (SURVEY §2.6 J3), so the pools
+    are per signature: a PumpFun create registers its user, plus its
+    creator when non-zero and distinct; a Bonk initialize registers
+    its creator. A PumpFun trade is a dev trade when its user or
+    creator is in the PumpFun pool, a Bonk trade when its payer is in
+    the Bonk pool; create-after-trade order within the transaction
+    still counts, as the pools cover the whole signature.
+
+    ``build_decode_input`` is narrow (filters, explodes, projections),
+    so all rows of one transaction are contiguous in one partition;
+    only the Arrow batching can cut a transaction in two. The trailing
+    signature of each batch is therefore held back and flagged with
+    the next batch, or at the end of the partition. A transaction
+    duplicated into another raw row is a self-contained copy, so it
+    flags the same wherever it lands.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    field = pa.field(DEV_FLAG, pa.bool_())
+    carry = None
+    for batch in batches:
+        tbl = pa.Table.from_batches([batch])
+        if carry is not None:
+            tbl = pa.concat_tables([carry, tbl])
+        n = tbl.num_rows
+        if n == 0:
+            continue
+        sig = tbl.column("signature")
+        last = sig[n - 1]
+        tail = (pc.is_null(sig) if not last.is_valid
+                else pc.fill_null(pc.equal(sig, last), False))
+        head = np.flatnonzero(~tail.to_numpy())
+        cut = int(head[-1]) + 1 if head.size else 0
+        carry = tbl.slice(cut)
+        if cut:
+            yield from _flag_table(tbl.slice(0, cut), field)
+    if carry is not None and carry.num_rows:
+        yield from _flag_table(carry, field)
+
+
+def _flag_table(tbl, field):
+    """Record batches of ``tbl`` (whole signatures only) with the J3
+    flag column appended; see _with_dev_flags."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    et = tbl.column("event_type")
+
+    def _is(types):
+        return pc.is_in(et, value_set=pa.array(types)).to_numpy()
+
+    def _at(name, idx):
+        return tbl.column(name).take(pa.array(idx, pa.int64())).to_pylist()
+
+    pf_trade, bonk_trade = _is(_PF_TRADES), _is(_BONK_TRADES)
+    trade = pf_trade | bonk_trade
+    flag = np.zeros(tbl.num_rows, bool)
+    creates = np.flatnonzero(_is(_PF_CREATES + _BONK_CREATES))
+    pf_pool: dict = {}
+    bonk_pool: dict = {}
+    for s, e, user, creator in zip(
+            _at("signature", creates), _at("event_type", creates),
+            _at("user", creates), _at("creator", creates)):
+        if s is None:            # a NULL key joins no pool
+            continue
+        if e in _PF_CREATES:
+            pool = pf_pool.setdefault(s, set())
+            if user is not None:
+                pool.add(user)
+            if (creator is not None and user is not None
+                    and creator != ZERO_PUBKEY and creator != user):
+                pool.add(creator)
+        elif creator is not None:
+            bonk_pool.setdefault(s, set()).add(creator)
+    if pf_pool or bonk_pool:
+        trades = np.flatnonzero(trade)
+        keyed = pc.is_in(tbl.column("signature").take(pa.array(trades)),
+                         value_set=pa.array([*pf_pool, *bonk_pool],
+                                            pa.string())).to_numpy()
+        trades = trades[keyed]
+        for i, s, user, creator, payer in zip(
+                trades.tolist(), _at("signature", trades),
+                _at("user", trades), _at("creator", trades),
+                _at("payer", trades)):
+            if pf_trade[i]:
+                pool = pf_pool.get(s, ())
+                flag[i] = user in pool or creator in pool
+            else:
+                flag[i] = payer in bonk_pool.get(s, ())
+    col = pa.array(flag, pa.bool_(), mask=~trade)
+    yield from tbl.append_column(field, col).to_batches()
 
 
 def build_events(raw_tx: DataFrame,
                  protocols: tuple[str, ...] | None = None,
                  bot_wallet: str | None = None) -> DataFrame:
-    """Raw transactions (FIXTURES.md §1 schema) -> enriched event table.
-
-    The J3 dev pools come from a SLIM second decode pass: the JVM
-    dispatch already knows event_type before Python, so the creates
-    branch filters to the five create/initialize types pre-decode and
-    Python decodes only those few rows. Recomputing the narrow JVM parse
-    for that branch costs one extra scan; it saves shuffling the full
-    ~375-wide event rows on signature (the enrichment join's build side
-    is a per-signature aggregate AQE broadcasts in the common case —
-    see enrich_events).
-    """
-    din = build_decode_input(raw_tx, protocols)
-    events = _apply_decode(din)
-    create_events = _apply_decode(
-        din.filter(F.col("event_type").isin(*_CREATE_EVENT_TYPES)))
-    return enrich_events(events, bot_wallet,
-                         creates=_create_pools(create_events))
+    """Raw transactions (FIXTURES.md §1 schema) -> enriched event table:
+    the core decode (J3 included) plus the row-local J4/P11 columns.
+    One narrow pass: no second decode, no aggregate, no join."""
+    return enrich_events(build_events_core(raw_tx, protocols), bot_wallet)
 
 
 def build_events_core(raw_tx: DataFrame,
                       protocols: tuple[str, ...] | None = None
                       ) -> DataFrame:
-    """Pipeline through decode+merge, WITHOUT the J3/J4/P11 enrichment —
-    works on both batch and streaming DataFrames (the enrichment runs
-    per micro-batch in streaming/sink.py)."""
+    """Pipeline through decode+merge and the J3 dev flag, WITHOUT the
+    J4/P11 projections — works on both batch and streaming DataFrames
+    (J4/P11 run per micro-batch in streaming/sink.py, or at read time
+    over an event archive)."""
     return _apply_decode(build_decode_input(raw_tx, protocols))
 
 
@@ -298,11 +388,15 @@ def _decode_tables() -> dict:
 
 
 def _apply_decode(decode_input: DataFrame) -> DataFrame:
-    """P5/P6 + J1-merge + J2-match decode stage (Arrow-batched Python)."""
+    """P5/P6 + J1-merge + J2-match decode stage and the J3 dev flag, in
+    one Arrow-batched Python worker (event schema + the flag column)."""
+    from pyspark.sql.types import BooleanType, StructField, StructType
+
     tables = _decode_tables()
     return decode_input.mapInArrow(
-        lambda it: _decode_batches(it, None, tables=tables),
-        schema=tables["schema"])
+        lambda it: _with_dev_flags(_decode_batches(it, None, tables=tables)),
+        schema=StructType(tables["schema"].fields
+                          + [StructField(DEV_FLAG, BooleanType())]))
 
 
 def build_decode_input(raw_tx: DataFrame,
@@ -561,52 +655,23 @@ def build_decode_input(raw_tx: DataFrame,
         "has_inner_group", "cpi_candidates", "transfer_candidates")
 
 
-def enrich_events(events: DataFrame, bot_wallet: str | None,
-                  creates: DataFrame | None = None) -> DataFrame:
-    """J3 dev-address flags, J4 bot flag, P11 swap amount fill
-    (core/event_parser.rs:671-736).
+def enrich_events(events: DataFrame, bot_wallet: str | None) -> DataFrame:
+    """J4 bot flag and P11 swap amount fill (core/event_parser.rs:
+    671-736) over core events, which already carry the J3 dev flag
+    (see _with_dev_flags).
 
-    The reference's GlobalState map is keyed by signature and only ever
-    read by events of the same transaction (SURVEY §2.6 J3). Instead of
-    a window over `signature` — which would shuffle the FULL ~375-wide
-    event rows — the per-signature dev pools are aggregated from ONLY
-    the create/initialize events (a minuscule fraction of the stream;
-    the aggregate shuffle carries 4 narrow columns) and joined back.
-    AQE sizes the aggregate at runtime: when the create set fits the
-    broadcast threshold (the overwhelmingly common case, per micro-batch
-    or per partition range) the wide side is never exchanged at all;
-    with billions of creates it degrades to exactly the shuffle the
-    window form always paid. Signature is a 64-byte uniform hash, so
-    the fallback shuffle has no skew at any scale.
-
-    ``creates``: pre-aggregated dev pools (from :func:`_create_pools`
-    over a slim creates-only decode — see build_events). When None
-    (streaming micro-batches, standalone use) the pools derive from
-    ``events`` itself; re-evaluating the in-memory batch for the tiny
-    filtered aggregate is cheap there.
+    Both are projections of the row itself, so this adds no aggregate,
+    exchange or join: over a micro-batch, an archive or a batch table
+    it is one narrow pass.
     """
-    if creates is None:
-        creates = _create_pools(events)
-    events = events.join(creates, "signature", "left")
-
     # Parsed-SQL column bodies (r18, guide §7.3 — see build_decode_input
     # note; enrich ran ~0.6 s of py4j chatter per build). Same CASE
     # trees as the Column form; the dex_enrichment_flags oracle pins
     # the values.
-    is_pf = "event_type IN ('PumpFunBuy', 'PumpFunSell')"
-    is_bonk = ("event_type IN ('BonkBuyExactIn', 'BonkBuyExactOut', "
-               "'BonkSellExactIn', 'BonkSellExactOut')")
+    def _in(types):
+        return "event_type IN (" + ", ".join(f"'{t}'" for t in types) + ")"
 
-    dev_pool = "array_union(_dev_users, _dev_creators)"
-
-    def _contains(arr, col):  # NULL member -> false, as in the reference
-        return f"coalesce(array_contains({arr}, {col}), false)"
-
-    is_dev = (
-        f"CASE WHEN {is_pf} THEN ({_contains(dev_pool, 'user')} "
-        f"OR {_contains(dev_pool, 'creator')}) "
-        f"WHEN {is_bonk} THEN {_contains('_bonk_devs', 'payer')} "
-        "ELSE CAST(NULL AS BOOLEAN) END")
+    is_pf, is_bonk = _in(_PF_TRADES), _in(_BONK_TRADES)
 
     # SQL-quote the caller-supplied wallet ('' escaping, r18 ADVICE):
     # semantics equal the old F.lit comparison for every input, and a
@@ -617,11 +682,9 @@ def enrich_events(events: DataFrame, bot_wallet: str | None,
               f"WHEN {is_bonk} THEN payer = {bot} "
               "ELSE CAST(NULL AS BOOLEAN) END")
 
-    out = (events
-           .withColumn("is_dev_create_token_trade", F.expr(is_dev))
-           .withColumn("is_bot", F.expr(
-               f"coalesce({is_bot}, CASE WHEN {is_pf} OR {is_bonk} "
-               "THEN false END)")))
+    out = events.withColumn("is_bot", F.expr(
+        f"coalesce({is_bot}, CASE WHEN {is_pf} OR {is_bonk} "
+        "THEN false END)"))
 
     # P11 swap amount fill (post-merge values, event_parser.rs:690-722)
     has_swap = "swap_from_mint IS NOT NULL"
@@ -650,31 +713,7 @@ def enrich_events(events: DataFrame, bot_wallet: str | None,
                 f"CAST(user_quote_amount_out AS {dec}) "
                 "ELSE swap_to_amount END"))
     )
-    return out.drop("_dev_users", "_dev_creators", "_bonk_devs")
-
-
-def _create_pools(events: DataFrame) -> DataFrame:
-    """Per-signature J3 dev pools from decoded create/initialize events.
-
-    Accepts either the full event stream (filters to the five create
-    types itself) or an already-creates-only frame (the filter is then a
-    no-op). collect_set combines partially map-side, so the shuffle
-    carries only signatures that actually contain a create.
-    """
-    pf = "event_type IN ('PumpFunCreateToken', 'PumpFunCreateV2Token')"
-    bonk = ("event_type IN ('BonkInitialize', 'BonkInitializeV2', "
-            "'BonkInitializeWithToken2022')")
-    return (
-        events.filter(F.expr(f"{pf} OR {bonk}"))
-        .select("signature", "event_type", "user", "creator")
-        .groupBy("signature")
-        .agg(F.expr(f"collect_set(CASE WHEN {pf} THEN user END) "
-                    "AS _dev_users"),
-             F.expr(f"collect_set(CASE WHEN {pf} "
-                    f"AND creator != '{ZERO_PUBKEY}' AND creator != user "
-                    "THEN creator END) AS _dev_creators"),
-             F.expr(f"collect_set(CASE WHEN {bonk} THEN creator END) "
-                    "AS _bonk_devs")))
+    return out
 
 
 def load_raw_transactions(spark, path: str) -> DataFrame:

@@ -198,9 +198,9 @@ def dex_pipeline_throughput(spark, sf_dir: str) -> DataFrame:
     # in every replica — dev pools resolve within a replica's own
     # signatures), never from the replica-varying envelope
     # (signature/slot). Including the enrichment flags also keeps the
-    # J3 join in the plan — with a count-only aggregate Catalyst prunes
-    # the unused left join and the "full DAG" claim would silently
-    # exclude enrich. pmod keeps the 94k-row sum far from i64 overflow.
+    # J4 projection in the measured DAG (a count-only aggregate would
+    # prune it; J3 rides in the decode worker either way). pmod keeps
+    # the 94k-row sum far from i64 overflow.
     check_cols = ["mint", "user", "sol_amount", "token_amount",
                   "amount_in", "amount_out", "swap_from_mint",
                   "swap_to_mint", "swap_from_amount", "swap_to_amount",

@@ -11,11 +11,12 @@ commit log means a concurrent batch reader only ever sees committed
 files — Spark's batch parquet reader honors the log automatically when
 pointed at the sink directory).
 
-Enrichment (J3/J4/P11) is deliberately NOT baked into the archive:
-the creates-pool join is computed per micro-batch on the live path,
-but an archive reader can do strictly better by running
-`plans.pipeline.enrich_events` over the whole archive (global pools —
-the exact batch semantics). Store the core decode, enrich at read.
+J3 (the dev flag) is stored with the core decode: the decode worker
+computes it per signature, and a signature never spans transactions,
+so the stored flag equals the batch semantics. J4/P11 (bot flag, swap
+amount fill) are row-local projections and stay at READ time
+(`plans.pipeline.enrich_events`), so one archive serves any bot
+wallet. Store the core decode, enrich at read.
 
 Row-group-level pruning (the (program_id, slot) sort the batch writer
 applies) cannot be expressed in a streaming write — compaction
@@ -805,8 +806,8 @@ def load_event_archive(spark: SparkSession, archive_dir: str,
 def load_enriched_events(spark: SparkSession, archive_dir: str,
                          bot_wallet: str | None = None) -> DataFrame:
     """The documented enrich-at-read pattern as an API: archive core
-    events + `enrich_events` with GLOBAL creates pools — equal to batch
-    `build_events` over the original raws (tested in
+    events (J3 stored) + the J4/P11 projections of `enrich_events` —
+    equal to batch `build_events` over the original raws (tested in
     test_event_archive_stream_roundtrip_and_pruning)."""
     from ..plans.pipeline import enrich_events
     return enrich_events(

@@ -7,10 +7,13 @@ Structured Streaming notes vs the reference:
 - ordering: events inside each micro-batch are sorted by
   (slot, transaction_index, outer_index, inner_index, event_type) before
   the callback — the reference's synchronous intra-transaction order;
-- enrichment (J3/J4 window over signature) runs inside foreachBatch: a
-  signature's events always share a transaction and hence a micro-batch,
-  so per-batch enrichment is semantically identical to the global window
-  (and keeps the streaming plan free of unsupported non-time windows).
+- enrichment: J3 is computed in the decode worker per signature (a
+  signature's events always share a transaction and hence a partition of
+  one micro-batch, so this equals a global window over signature), and
+  the J4/P11 projections run inside foreachBatch. Nothing is persisted:
+  the driver handlers run ONE job per micro-batch (the collect), so the
+  decode runs once. Only the partition form persists, because its range
+  sampling is a second job over the same batch.
 """
 
 from __future__ import annotations
@@ -22,12 +25,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..plans.pipeline import enrich_events
 
-# Default for the per-batch persist below: spills to local disk instead
-# of failing/evicting under memory pressure — at cluster batch sizes a
-# hot MEMORY_ONLY cache of the decoded batch can exceed executor
-# storage memory. Every factory takes `storage_level` so memory-tight
-# deployments can choose (e.g. StorageLevel.DISK_ONLY).
-DEFAULT_BATCH_STORAGE = StorageLevel.MEMORY_AND_DISK
 
 def _nulls_first(v):
     """Sort-key wrapper matching Spark's ascending NULLS FIRST."""
@@ -46,9 +43,7 @@ def _row_order_key(r) -> tuple:
 
 
 def foreach_batch_callback(callback: Callable[[list], None],
-                           bot_wallet: str | None = None,
-                           storage_level: StorageLevel =
-                           DEFAULT_BATCH_STORAGE):
+                           bot_wallet: str | None = None):
     """K1: invoke `callback(rows)` once per micro-batch with enriched,
     deterministically ordered event rows.
 
@@ -64,24 +59,14 @@ def foreach_batch_callback(callback: Callable[[list], None],
     for rows that are about to leave the cluster.
     """
     def _handle(batch_df: DataFrame, batch_id: int):
-        # persist the decoded micro-batch: enrich_events derives its
-        # creates-pool aggregate from the batch itself, which would
-        # otherwise re-run the Arrow decode stage a second time per
-        # batch (measured ~2x addBatch time in latency_probe.py)
-        batch_df = batch_df.persist(storage_level)
-        try:
-            enriched = enrich_events(batch_df, bot_wallet)
-            callback(sorted(enriched.collect(), key=_row_order_key))
-        finally:
-            batch_df.unpersist()
+        rows = enrich_events(batch_df, bot_wallet).collect()
+        callback(sorted(rows, key=_row_order_key))
     return _handle
 
 
 def foreach_partition_callback(callback: Callable[[list], None],
                                bot_wallet: str | None = None,
-                               num_partitions: int | None = None,
-                               storage_level: StorageLevel =
-                               DEFAULT_BATCH_STORAGE):
+                               num_partitions: int | None = None):
     """K1 at scale: `callback(rows)` runs per PARTITION on the executors
     — no driver bottleneck.
 
@@ -96,7 +81,9 @@ def foreach_partition_callback(callback: Callable[[list], None],
     (slot, transaction_index).
     """
     def _handle(batch_df: DataFrame, batch_id: int):
-        batch_df = batch_df.persist(storage_level)  # one decode pass, not two
+        # the range-partition sampling job and the foreachPartition job
+        # would each run the decode without this persist
+        batch_df = batch_df.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             enriched = enrich_events(batch_df, bot_wallet)
             keys = [F.col("slot"), F.col("transaction_index"),
@@ -114,9 +101,7 @@ def foreach_partition_callback(callback: Callable[[list], None],
 
 def foreach_batch_callback_strict(callback: Callable[[list], None],
                                   state=None,
-                                  bot_wallet: str | None = None,
-                                  storage_level: StorageLevel =
-                                  DEFAULT_BATCH_STORAGE):
+                                  bot_wallet: str | None = None):
     """K1 with reference-EXACT GlobalState semantics: the dev flag is
     computed by folding the ordered rows through a `CappedGlobalState`
     that persists ACROSS micro-batches — cross-batch create->trade
@@ -130,19 +115,15 @@ def foreach_batch_callback_strict(callback: Callable[[list], None],
     state = state if state is not None else CappedGlobalState()
 
     def _handle(batch_df: DataFrame, batch_id: int):
-        batch_df = batch_df.persist(storage_level)
-        try:
-            enriched = enrich_events(batch_df, bot_wallet)
-            rows = sorted(enriched.collect(), key=_row_order_key)
-            flags = fold_rows_with_global_state(rows, state)
-            out = []
-            for r, flag in zip(rows, flags):
-                d = r.asDict()
-                d["is_dev_create_token_trade"] = flag
-                out.append(d)
-            callback(out)
-        finally:
-            batch_df.unpersist()
+        rows = sorted(enrich_events(batch_df, bot_wallet).collect(),
+                      key=_row_order_key)
+        flags = fold_rows_with_global_state(rows, state)
+        out = []
+        for r, flag in zip(rows, flags):
+            d = r.asDict()
+            d["is_dev_create_token_trade"] = flag
+            out.append(d)
+        callback(out)
     return _handle
 
 
@@ -153,8 +134,6 @@ def start_event_stream(raw_stream: DataFrame,
                        protocols=None,
                        global_state=None,
                        dedup_redelivery: str | None = None,
-                       storage_level: StorageLevel =
-                       DEFAULT_BATCH_STORAGE,
                        state_partitions: int | None = None):
     """raw transaction stream -> decoded events -> ordered callback sink.
 
@@ -162,9 +141,9 @@ def start_event_stream(raw_stream: DataFrame,
     ``True`` for a fresh one) to switch the dev-flag enrichment to the
     reference-exact cross-batch capped store (see
     `foreach_batch_callback_strict`); rows then arrive as dicts.
-    Default (None) keeps the window-form per-batch enrichment, exact
-    whenever a signature's events share a micro-batch — every case the
-    reference's own delivery produces.
+    Default (None) keeps the per-signature J3 of the decode worker,
+    exact whenever a signature's events share a micro-batch — every
+    case the reference's own delivery produces.
 
     ``dedup_redelivery``: a watermark duration (e.g. "10 minutes") to
     insert the cross-batch redelivery filter (`streaming/dedup.py`) in
@@ -186,11 +165,9 @@ def start_event_stream(raw_stream: DataFrame,
         from .state import CappedGlobalState
         state = (CappedGlobalState() if global_state is True
                  else global_state)
-        handler = foreach_batch_callback_strict(callback, state, bot_wallet,
-                                                storage_level)
+        handler = foreach_batch_callback_strict(callback, state, bot_wallet)
     else:
-        handler = foreach_batch_callback(callback, bot_wallet,
-                                         storage_level)
+        handler = foreach_batch_callback(callback, bot_wallet)
     from .state import pin_state_width, resolve_state_width
     restore = pin_state_width(
         raw_stream.sparkSession, checkpoint_dir,

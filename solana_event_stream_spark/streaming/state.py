@@ -1,7 +1,7 @@
 """Strict cross-batch J3 dev-address state (opt-in).
 
-The default J3 implementation is the window-over-signature in
-plans/pipeline.py:enrich_events — exact whenever a transaction's create
+The default J3 implementation is the per-signature pass in the decode
+worker (plans/pipeline.py:_with_dev_flags) — exact whenever a transaction's create
 and trade events arrive in the same micro-batch, which is every case the
 reference's own delivery produces (create and trade share a SIGNATURE,
 i.e. a transaction, and one transaction arrives as one message). This
@@ -18,8 +18,8 @@ or a replay seam): keyed streaming state per signature, mirroring
 - reads: PumpFun trades check user/creator membership, Bonk trades check
   payer (`:690-693, 728-731`);
 - rows are processed in event order (slot, tx_index, outer, inner) —
-  sequential like the reference's callback loop, NOT the window form's
-  whole-partition collect_set;
+  sequential like the reference's callback loop, NOT the default form's
+  whole-signature pools;
 - capacity: the reference caps the map at 1000 signatures and evicts 100
   arbitrary victims when full (`global_state.rs:7-8, 40-68`) — a global
   bound whose victim choice is explicitly arbitrary. Spark keyed state

@@ -86,32 +86,22 @@ def test_account_pipeline_single_scan_no_shuffle(spark):
 
 
 def test_enrichment_keeps_wide_rows_unshuffled(spark):
-    """J3 enrichment must never shuffle the full ~375-wide event rows:
-    the dev-pool aggregate (narrow: signature + 3 sets) shuffles, then
-    AQE broadcasts it back onto the un-exchanged wide side. Verified on
-    the FINAL adaptive plan (the static plan conservatively shows a
-    sort-merge join; materializing the frame locks in the runtime
-    broadcast decision on the same QueryExecution)."""
-    import re
-
+    """Enrichment must never shuffle the ~375-wide event rows: J3 comes
+    out of the decode worker and J4/P11 are projections, so the final
+    plan of build_events holds no hash Exchange and no join at all
+    (checked after a collect, on the plan that actually ran)."""
     from solana_event_stream_spark.plans.pipeline import (
         build_events, load_raw_transactions)
     raw = load_raw_transactions(
         spark, os.path.join(FIXTURES, "raw_transactions.parquet"))
     ev = build_events(raw)
-    ev.collect()  # finalize AQE on this DataFrame's QueryExecution
+    ev.collect()
     plan = plan_of(ev)
-    assert "isFinalPlan=true" in plan
-    assert "BroadcastHashJoin" in plan      # pool broadcast onto wide side
-    assert "SortMergeJoin" not in plan
-    # every surviving shuffle exchange is narrow (the dev-pool aggregate),
-    # never the wide event payload
-    blocks = re.split(r"\n\(\d+\) ", plan)
-    for b in blocks:
-        if b.startswith("Exchange") and "hashpartitioning" in b:
-            m = re.search(r"Input \[(\d+)\]", b)
-            assert m and int(m.group(1)) <= 8, b[:300]
-            assert "sol_amount" not in b and "swap_from_mint" not in b
+    executed = str(ev._jdf.queryExecution().executedPlan())
+    for text in (plan, executed):
+        assert "Exchange" not in text, text[:2000]
+        assert "Join" not in text, text[:2000]
+    assert executed.count("FileScan") == 1, executed[:2000]
 
 
 def test_dedup_joins_are_blocked_not_cross(spark):

@@ -131,48 +131,34 @@ def test_row_order_key_matches_spark_orderby(spark):
     assert py_order == spark_order
 
 
-def test_sink_storage_level_knob(spark, monkeypatch):
-    """Item from round-7 verdict: the per-batch persist honours the
-    `storage_level` parameter (default MEMORY_AND_DISK) so memory-tight
-    clusters can choose DISK_ONLY. Asserted by recording the level each
-    factory passes to DataFrame.persist."""
-    from pyspark import StorageLevel
-    from solana_event_stream_spark.streaming.sink import (
-        DEFAULT_BATCH_STORAGE, foreach_batch_callback,
-        foreach_batch_callback_strict, foreach_partition_callback)
+def test_driver_handlers_run_one_job_per_batch(spark):
+    """The K1 handler and the strict handler each launch exactly ONE
+    Spark job per micro-batch (the collect): J3 comes out of the decode
+    worker, so nothing is persisted, aggregated or joined first. Jobs
+    are counted by job group, as a stream's triggers are."""
+    import uuid
 
     from solana_event_stream_spark.plans.pipeline import (
         build_events_core, load_raw_transactions)
+    from solana_event_stream_spark.streaming.sink import (
+        foreach_batch_callback, foreach_batch_callback_strict)
+
     fixtures = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "fixtures")
     df = build_events_core(load_raw_transactions(
         spark, os.path.join(fixtures, "raw_transactions.parquet")))
-
-    # patch the CONCRETE class (pyspark.sql.classic DataFrame), not the
-    # pyspark.sql.DataFrame facade — the subclass overrides persist
-    cls = type(df)
-    seen: list = []
-    real_persist = cls.persist
-
-    def recording_persist(self, storageLevel=StorageLevel.MEMORY_AND_DISK):
-        seen.append(storageLevel)
-        return real_persist(self, storageLevel)
-
-    monkeypatch.setattr(cls, "persist", recording_persist)
-
-    assert DEFAULT_BATCH_STORAGE == StorageLevel.MEMORY_AND_DISK
-    for factory, kwargs, expect in [
-            (foreach_batch_callback, {}, StorageLevel.MEMORY_AND_DISK),
-            (foreach_batch_callback,
-             {"storage_level": StorageLevel.DISK_ONLY},
-             StorageLevel.DISK_ONLY),
-            (foreach_partition_callback,
-             {"storage_level": StorageLevel.DISK_ONLY},
-             StorageLevel.DISK_ONLY),
-            (foreach_batch_callback_strict,
-             {"storage_level": StorageLevel.DISK_ONLY},
-             StorageLevel.DISK_ONLY)]:
-        seen.clear()
-        handler = factory(lambda rows: None, **kwargs)
-        handler(df, 0)
-        assert seen and seen[0] == expect, (factory.__name__, seen)
+    n_events = df.count()
+    sc = spark.sparkContext
+    for factory in (foreach_batch_callback, foreach_batch_callback_strict):
+        delivered: list = []
+        handler = factory(delivered.extend)
+        group = f"{factory.__name__}-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, factory.__name__)
+        try:
+            handler(df, 0)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(delivered) == n_events, factory.__name__
+        assert len(jobs) == 1, (factory.__name__, jobs)
