@@ -184,11 +184,14 @@ def probe_multiprobe(spark) -> list[dict]:
     from solana_event_stream_spark.catalog import load_catalog
     from solana_event_stream_spark.operators.dedup import scaled_n_planes
     from solana_event_stream_spark.operators.similarity import (
-        _probe_masks, ann_lsh_topk_multiprobe)
+        N_QUERIES, _probe_masks, ann_topk_frames)
     from solana_event_stream_spark.tables import load_spread
 
     cat = load_catalog()
-    n_vec = load_spread(spark, SF_DIR, "embeddings").count()
+    emb = load_spread(spark, SF_DIR, "embeddings")
+    n_vec = emb.count()
+    queries = (emb.filter(F.col("vec_id") < N_QUERIES)
+               .select(F.col("vec_id").alias("query_id"), "embedding"))
     brute = {(r.query_id, r.neighbor_id)
              for r in cat["ann_cosine_topk"].spark_fn(
                  spark, SF_DIR).collect()}
@@ -196,9 +199,8 @@ def probe_multiprobe(spark) -> list[dict]:
     out = []
     for n_planes in sorted({scaled_n_planes(n_vec), 16}):
         for bits in (0, 1, 2, 3):
-            df = ann_lsh_topk_multiprobe(spark, SF_DIR,
-                                         n_planes=n_planes,
-                                         nprobe_bits=bits)
+            df = ann_topk_frames(queries, emb, n_planes=n_planes,
+                                 nprobe_bits=bits)
             got = [None]
 
             def _run():

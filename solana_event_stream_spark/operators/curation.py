@@ -490,7 +490,7 @@ def kmeans_fit_scaled(emb: DataFrame, k: int = KM_K,
     DECIMAL-exact update — returns the final CENTROIDS instead of the
     assignment. This is how a deployment builds a data-fitted IVF
     coarse quantizer: ``ivf_cells_arrow(corpus, kmeans_fit_scaled(
-    corpus, k))`` (similarity.ann_ivf_topk_fitted wires it).
+    corpus, k))``, searched with similarity.ann_ivf_topk_frames.
 
     ``init`` (r17): k explicit starting centroids for callers whose id
     space doesn't contain 0..k-1 — dedup_index.refit_ivf_centroids

@@ -1,15 +1,31 @@
 """Similarity search over the `embeddings` table (array<float> column).
 
-- brute-force cosine top-k: the correctness baseline — broadcast the
-  query set, rank per query;
-- LSH-bucketed top-k: the scale path — deterministic random-hyperplane
-  signatures (md5-derived weights) shrink the candidate set to an
-  equi-join on bucket before ranking.
+Every search form ends in ONE scorer, :func:`_score_topk`: broadcast the
+query features, join them to the corpus features on an optional
+blocking key (plus the self-match exclusion), score exact cosine with
+an ordered-fold dot product, keep the bounded two-phase per-query top-k
+(:func:`_topk_per_query`). The forms differ only in how they block:
 
-At 100 TB the brute-force form is a broadcast-join + per-partition
-top-k (no shuffle except the final per-query heads); the LSH form makes
-the candidate join key-based. All math uses ordered folds (bitwise
-deterministic across Spark/DuckDB — see operators/dedup.py).
+- brute force (``ann_cosine_topk``, ``ann_topk_frames(method="brute")``):
+  no key — the correctness baseline, every corpus row is scored;
+- LSH (``ann_lsh_topk``, ``ann_topk_frames(method="lsh")``):
+  deterministic random-hyperplane signatures (md5-derived weights) as
+  the bucket key; the frame form adds corpus-tracking plane counts and
+  the multi-probe ``nprobe_bits`` recall dial;
+- IVF (``ann_ivf_topk``, ``ann_ivf_topk_frames``): the nearest coarse
+  centroid as the cell key — a literal-centroid argmax fold, or the
+  Arrow matmul backend (``ivf_cells_arrow``) for quantizers past
+  ``IVF_LITERAL_CEILING``, with the ``nprobe`` recall dial on the query
+  side.
+
+The catalog queries are the oracle-pinned fixed-slice forms (queries =
+vec_id < N_QUERIES); ``ann_topk_frames`` / ``ann_ivf_topk_frames`` are
+the deployment entry points over arbitrary query and corpus frames, and
+the streaming serving loop at the bottom of this module answers
+micro-batches through them. At 100 TB the query side stays a broadcast
+(no shuffle except the final per-query heads) and the blocked forms
+make the candidate join key-based. All math uses ordered folds
+(bitwise deterministic across Spark/DuckDB — see operators/dedup.py).
 """
 
 from __future__ import annotations
@@ -20,7 +36,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import register
-from ..tables import load_spread, load_table
+from ..tables import load_spread
 from .dedup import _SPARK_DOT, _SQL_DOT, _SQL_SIGN
 
 N_QUERIES = 10
@@ -37,14 +53,6 @@ IVF_CENTROID_BASE = 100  # vec_ids used as deterministic centroids
 # (BENCH_NOTES r17). The switch now sits at the measured-equal point;
 # the catalog's small fixed quantizers (IVF_K x 64 = 512) stay
 # literal, keeping their oracle-pinned plans.
-# MIGRATION HAZARD (r17->r18): a corpus whose quantizer sits in
-# (1024, 4096] literals was cell-STAMPED by the literal fold under
-# the old ceiling but is now PROBED via the Arrow backend; both
-# backends share the ties-to-smallest-cid rule but differ in
-# low-order norm bits, so near-tie vectors can hold a committed cell
-# no probe derivation reaches — silently losing those neighbors.
-# After upgrading, run refit_ivf_centroids (or any re-stamp) on
-# quantizers in the shifted range to realign committed cells.
 IVF_LITERAL_CEILING = 1024
 TOPK_SALTS = 32     # phase-1 reduce fan-out of the two-phase top-k
 
@@ -74,6 +82,74 @@ def _topk_per_query(scored: DataFrame, k: int = TOP_K) -> DataFrame:
             .filter(F.col("rk") <= k))
 
 
+def _norm() -> F.Column:
+    """sqrt of the ordered-fold self dot of the current row's
+    ``embedding`` — the vector norm every scorer input carries."""
+    return F.sqrt(F.expr(_SPARK_DOT.format(a="embedding", b="embedding")))
+
+
+def _score_topk(queries: DataFrame, corpus: DataFrame, k: int = TOP_K,
+                key: str | None = None, key_never_null: bool = False,
+                exclude_self: bool = True,
+                broadcast: bool = True) -> DataFrame:
+    """The one ANN scorer: ``queries`` (query_id, q_emb, q_nrm
+    [, q_<key>]) joined to ``corpus`` (vec_id, embedding, nrm[, <key>])
+    on ``q_<key> = <key>`` (when a blocking key is given) and
+    ``query_id != vec_id`` (when ``exclude_self``), in that order, then
+    exact cosine and the per-query top-k. Returns (query_id,
+    neighbor_id, cosine, rk <= k). ``broadcast`` hints the query side.
+
+    ``key_never_null`` joins the key with ``<=>`` instead of ``=``
+    (r19): a plain equi-join makes
+    InferFiltersFromConstraints inject isnotnull(<key>) below the
+    corpus-side projection, and a COMPUTED key is then evaluated twice
+    per corpus row (once in the inferred Filter, once in the Project
+    that emits the column) — for the catalog IVF cell, the k x dims
+    argmax fold that dominates the query. Declare it only for keys that
+    are provably never NULL (that fold's cid is an array index over a
+    literal centroid array: NULL/short embeddings yield NULL cosines,
+    but the argmax still returns a struct with a literal cid), where
+    the inferred filter keeps every row and ``<=>`` is row-for-row
+    identical to ``=``; the join stays a broadcast hash join
+    (EqualNullSafe is an equi-key for ExtractEquiJoinKeys). Keys that
+    can be NULL keep ``=``, so a NULL key never matches."""
+    cond = None
+    if key is not None:
+        q_key, c_key = F.col(f"q_{key}"), F.col(key)
+        cond = q_key.eqNullSafe(c_key) if key_never_null else q_key == c_key
+    if exclude_self:
+        ne = F.col("query_id") != F.col("vec_id")
+        cond = ne if cond is None else cond & ne
+    if broadcast:
+        queries = F.broadcast(queries)
+    return _cosine_topk(
+        queries.join(corpus, F.lit(True) if cond is None else cond), k)
+
+
+def _cosine_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Exact cosine of each (query_id, q_emb, q_nrm) x (vec_id,
+    embedding, nrm) pair, then the per-query top-k — the tail shared by
+    :func:`_score_topk` and :func:`_exact_rerank`. ``try_divide``: a
+    zero-norm or NULL vector scores a NULL cosine (never an ANSI 0/0)
+    and ranks last."""
+    dot = F.expr(_SPARK_DOT.format(a="q_emb", b="embedding"))
+    return _topk_per_query(
+        pairs.select("query_id", F.col("vec_id").alias("neighbor_id"),
+                     F.try_divide(dot, F.col("q_nrm") * F.col("nrm"))
+                     .alias("cosine")), k)
+
+
+def _catalog_queries(feats: DataFrame, key: str | None = None) -> DataFrame:
+    """The catalog forms' fixed query slice (vec_id < N_QUERIES) of a
+    (vec_id, embedding, nrm[, <key>]) frame, renamed to the scorer's
+    query features."""
+    cols = [F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("q_emb"), F.col("nrm").alias("q_nrm")]
+    if key is not None:
+        cols.append(F.col(key).alias(f"q_{key}"))
+    return feats.filter(F.col("vec_id") < N_QUERIES).select(*cols)
+
+
 @register(
     "ann_cosine_topk",
     oracle=f"""
@@ -99,20 +175,8 @@ def _topk_per_query(scored: DataFrame, k: int = TOP_K) -> DataFrame:
 )
 def ann_cosine_topk(spark, sf_dir: str) -> DataFrame:
     emb = load_spread(spark, sf_dir, "embeddings")
-    norms = emb.select(
-        "vec_id", "embedding",
-        F.sqrt(F.expr(_SPARK_DOT.format(a="embedding", b="embedding")))
-        .alias("nrm"))
-    queries = norms.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"), F.col("nrm").alias("q_nrm"))
-    dot = F.expr(_SPARK_DOT.format(a="q_emb", b="embedding"))
-    scored = (F.broadcast(queries)
-              .join(norms, F.col("query_id") != F.col("vec_id"))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.try_divide(dot, F.col("q_nrm") * F.col("nrm"))
-                      .alias("cosine")))
-    return _topk_per_query(scored)
+    norms = emb.select("vec_id", "embedding", _norm().alias("nrm"))
+    return _score_topk(_catalog_queries(norms), norms)
 
 
 # Deterministic hyperplanes shared with operators/dedup.py
@@ -146,59 +210,12 @@ def ann_cosine_topk(spark, sf_dir: str) -> DataFrame:
         "bits -> bucket equi-join -> rank candidates only.",
 )
 def ann_lsh_topk(spark, sf_dir: str) -> DataFrame:
-    from .dedup import _N_PLANES
-    return _lsh_topk(spark, sf_dir, _N_PLANES)
-
-
-def _lsh_topk(spark, sf_dir: str, n_planes: int) -> DataFrame:
-    from .dedup import bucket_col_for
+    from .dedup import _N_PLANES, bucket_col_for
 
     emb = load_spread(spark, sf_dir, "embeddings")
-    sigs = emb.select(
-        "vec_id", "embedding",
-        F.sqrt(F.expr(_SPARK_DOT.format(a="embedding", b="embedding")))
-        .alias("nrm"),
-        bucket_col_for(emb, n_planes).alias("bucket"))
-    queries = sigs.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"), F.col("nrm").alias("q_nrm"),
-        F.col("bucket").alias("q_bucket"))
-    dot = F.expr(_SPARK_DOT.format(a="q_emb", b="embedding"))
-    scored = (F.broadcast(queries)
-              .join(sigs, (F.col("q_bucket") == F.col("bucket"))
-                    & (F.col("query_id") != F.col("vec_id")))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.try_divide(dot, F.col("q_nrm") * F.col("nrm"))
-                      .alias("cosine")))
-    return _topk_per_query(scored)
-
-
-def ann_lsh_topk_scaled(spark, sf_dir: str, n_planes: int | None = None,
-                        target_bucket_size: int = 64,
-                        nprobe_bits: int = 0) -> DataFrame:
-    """The 100 TB form of ``ann_lsh_topk``: same algorithm, but the
-    hyperplane count tracks the corpus (dedup.scaled_n_planes) so the
-    per-bucket candidate count — the term that made the 8-bit form
-    trend ~corpus²/256 — stays ~target_bucket_size. At n_planes=8 the
-    plan is byte-identical to the catalog query (which stays 8-bit:
-    its oracle pins that bucket definition).
-
-    ``nprobe_bits`` is the recall dial that belongs WITH the scale
-    knob (r12 — BENCH_NOTES' sf1.0 ladder: at scaled n_planes the
-    single-probe top-k recall collapses, and 3 probe bits buy it back
-    at flat wall): >0 routes through
-    :func:`ann_lsh_topk_multiprobe` at the same plane count."""
-    from .dedup import embedding_width_census, scaled_n_planes
-
-    if n_planes is None:
-        n_planes = scaled_n_planes(
-            sum(embedding_width_census(
-                load_spread(spark, sf_dir, "embeddings")).values()),
-            target_bucket_size)
-    if nprobe_bits:
-        return ann_lsh_topk_multiprobe(spark, sf_dir, n_planes=n_planes,
-                                       nprobe_bits=nprobe_bits)
-    return _lsh_topk(spark, sf_dir, n_planes)
+    sigs = emb.select("vec_id", "embedding", _norm().alias("nrm"),
+                      bucket_col_for(emb, _N_PLANES).alias("bucket"))
+    return _score_topk(_catalog_queries(sigs, "bucket"), sigs, key="bucket")
 
 
 def _probe_masks(n_planes: int, nprobe_bits: int) -> list[int]:
@@ -252,73 +269,6 @@ def auto_nprobe_bits(n_planes: int, corpus_rows: int,
     return n_planes
 
 
-def ann_lsh_topk_multiprobe(spark, sf_dir: str,
-                            n_planes: int | None = None,
-                            nprobe_bits: int | str = 1) -> DataFrame:
-    """Multi-probe variant of ``ann_lsh_topk`` — the recall dial that
-    makes HIGH n_planes (the corpus-tracking setting from
-    dedup.scaled_n_planes) usable: the corpus keeps ONE bucket per
-    vector, but each query also probes every bucket within Hamming
-    distance ``nprobe_bits`` of its own signature (Lv et al. 2007's
-    perturbation idea on sign-LSH). Candidates scanned grow by
-    ~C(n_planes, <=nprobe_bits) x bucket_size — still a vanishing
-    corpus fraction at scaled n_planes — instead of recall collapsing
-    as each extra plane halves the home bucket's hit rate.
-
-    Zero new exchange shape: the probe list is a narrow explode on the
-    tiny query side; the join stays the same broadcast bucket
-    equi-join. nprobe_bits=0 is plan-equivalent to the single-probe
-    form; nprobe_bits=n_planes probes every bucket and returns exactly
-    the brute-force answer (both pinned in
-    tests/test_similarity_topk.py).
-
-    Plan-size note (VERDICT r11 item 5): the mask set ships as ONE
-    array<long> Literal — a single plan node whose VALUE holds the
-    C(n_planes, <=nprobe_bits) masks — exploded and XORed against the
-    signature once, data-side. The earlier form folded one XOR Column
-    PER mask into an F.array, re-introducing for probes the same
-    plan-growth-in-k the Arrow centroid backend removed for cells
-    (thousands of expressions at corpus-tracking n_planes ~20+ with
-    nprobe_bits >= 3); plan size is now flat in the mask count
-    (test_multiprobe_plan_flat_in_masks).
-
-    ``nprobe_bits="auto"`` (r13) derives the bit count from the
-    plane-count/corpus relationship (:func:`auto_nprobe_bits`) — the
-    corpus row count comes from the width census' value-sum
-    (memoized; no extra action on an already-censused corpus)."""
-    from .dedup import _N_PLANES, bucket_col_for, embedding_width_census
-
-    if n_planes is None:
-        n_planes = _N_PLANES
-    emb = load_spread(spark, sf_dir, "embeddings")
-    if nprobe_bits == "auto":
-        nprobe_bits = auto_nprobe_bits(
-            n_planes, sum(embedding_width_census(emb).values()))
-    masks = _probe_masks(n_planes, nprobe_bits)
-    sigs = emb.select(
-        "vec_id", "embedding",
-        F.sqrt(F.expr(_SPARK_DOT.format(a="embedding", b="embedding")))
-        .alias("nrm"),
-        bucket_col_for(emb, n_planes).alias("bucket"))
-    queries = (sigs.filter(F.col("vec_id") < N_QUERIES)
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("q_emb"),
-                       F.col("nrm").alias("q_nrm"), "bucket",
-                       F.explode(F.lit(masks).cast("array<long>"))
-                       .alias("probe_mask"))
-               .select("query_id", "q_emb", "q_nrm",
-                       F.col("bucket").bitwiseXOR(F.col("probe_mask"))
-                       .alias("q_bucket")))
-    dot = F.expr(_SPARK_DOT.format(a="q_emb", b="embedding"))
-    scored = (F.broadcast(queries)
-              .join(sigs, (F.col("q_bucket") == F.col("bucket"))
-                    & (F.col("query_id") != F.col("vec_id")))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.try_divide(dot, F.col("q_nrm") * F.col("nrm"))
-                      .alias("cosine")))
-    return _topk_per_query(scored)
-
-
 def _ivf_cells(spark, sf_dir: str) -> DataFrame:
     """Assign every vector to its nearest coarse centroid — zero-exchange.
 
@@ -332,29 +282,37 @@ def _ivf_cells(spark, sf_dir: str) -> DataFrame:
     ROW_NUMBER(ORDER BY cosine DESC, cent_id) form, without its full
     corpus hash exchange.
     """
-    norms, choices = _norms_and_centroid_choices(spark, sf_dir)
-    best = F.aggregate(
-        F.slice(choices, 2, IVF_K - 1),
-        F.element_at(choices, 1),
-        lambda acc, c: F.when(c["cos"] > acc["cos"], c).otherwise(acc))
+    norms, choices, _ = _norms_and_centroid_choices(spark, sf_dir)
     return norms.select("vec_id", "embedding", "nrm",
-                        best["cid"].alias("cell"))
+                        _nearest_cid(choices, IVF_K).alias("cell"))
+
+
+def _nearest_cid(choices: F.Column, n_cells: int) -> F.Column:
+    """The cid of the max-cosine struct in an array<struct<cos, cid>>
+    of per-centroid choices: strict ``>`` keeps the smallest cid on
+    exact ties (and the first cid when every cosine is NULL, so the
+    result is never NULL)."""
+    return F.aggregate(
+        F.slice(choices, 2, n_cells - 1), F.element_at(choices, 1),
+        lambda acc, c: F.when(c["cos"] > acc["cos"], c).otherwise(acc)
+    )["cid"]
 
 
 def _norms_and_centroid_choices(spark, sf_dir: str):
-    """Shared coarse-quantizer setup: the normalized corpus frame plus
-    ONE array<struct<cos, cid>> Column of per-centroid choices against
-    the current row's embedding. The 8 centroids are collected
-    driver-side (the standard k-means-style pattern) and ride as a
-    single array<array<double>> literal under one ``F.transform``
-    lambda (r12 — same plan-build cut as curation._assign; the cosine
-    fold arithmetic is unchanged, so values stay bitwise identical and
-    the oracle pins them)."""
+    """Shared coarse-quantizer setup: the normalized corpus frame, ONE
+    array<struct<cos, cid>> Column of per-centroid choices against the
+    current row's embedding, and the centroid vectors as float lists
+    (cent_id == list index — the ``centroids`` argument of
+    :func:`ann_ivf_topk_frames`; ``dict(enumerate(...))`` for
+    :func:`ivf_cells_arrow`). The IVF_K centroids are the corpus
+    vectors vec_id IVF_CENTROID_BASE.. collected driver-side (the
+    standard k-means-style pattern) and ride as a single
+    array<array<double>> literal under one ``F.transform`` lambda (r12
+    — same plan-build cut as curation._assign; the cosine fold
+    arithmetic is unchanged, so values stay bitwise identical and the
+    oracle pins them)."""
     emb = load_spread(spark, sf_dir, "embeddings")
-    norms = emb.select(
-        "vec_id", "embedding",
-        F.sqrt(F.expr(_SPARK_DOT.format(a="embedding", b="embedding")))
-        .alias("nrm"))
+    norms = emb.select("vec_id", "embedding", _norm().alias("nrm"))
     cent_rows = sorted(
         norms.filter(
             (F.col("vec_id") >= IVF_CENTROID_BASE)
@@ -375,8 +333,8 @@ def _norms_and_centroid_choices(spark, sf_dir: str):
     # IEEE order (double literals round-trip exactly through repr),
     # so cell assignments stay bitwise identical — the oracle pins it.
     from .curation import _sql_double_array_array, _sql_double_literal
-    cents_sql = _sql_double_array_array(
-        [[float(x) for x in r.embedding] for r in cent_rows])
+    cents = [[float(x) for x in r.embedding] for r in cent_rows]
+    cents_sql = _sql_double_array_array(cents)
     cnrm_sql = "array(" + ", ".join(
         _sql_double_literal(r.nrm) for r in cent_rows) + ")"
     choices = F.expr(
@@ -386,7 +344,7 @@ def _norms_and_centroid_choices(spark, sf_dir: str):
         "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v) "
         f"/ (nrm * element_at({cnrm_sql}, i + 1)), "
         "'cid', i))")
-    return norms, choices
+    return norms, choices, cents
 
 
 def ivf_cells_arrow(emb: DataFrame,
@@ -405,7 +363,7 @@ def ivf_cells_arrow(emb: DataFrame,
 
     ``nprobe > 1`` (r12) adds a ``probe_cells`` array column: the
     nprobe nearest cells by cosine DESC with ties to the smallest cid
-    (same total order as ann_ivf_topk_probed's array_sort) — the
+    (same total order as ivf_probe_cells_col's array_sort) — the
     standard IVF recall dial, on the backend whose cell count actually
     scales. Corpus rows still keep their single ``cell``; only the
     query side explodes ``probe_cells``."""
@@ -478,50 +436,6 @@ def ivf_cells_arrow(emb: DataFrame,
                                                         ret_schema)
 
 
-def _ivf_corpus_centroids(spark, sf_dir: str) -> dict[int, list[float]]:
-    """The deterministic corpus centroids (vec_id IVF_CENTROID_BASE..
-    +IVF_K) as a plain dict for the Arrow backend."""
-    emb = load_spread(spark, sf_dir, "embeddings")
-    rows = sorted(emb.filter(
-        (F.col("vec_id") >= IVF_CENTROID_BASE)
-        & (F.col("vec_id") < IVF_CENTROID_BASE + IVF_K)).collect(),
-        key=lambda r: r.vec_id)
-    if len(rows) != IVF_K:
-        raise ValueError(f"expected {IVF_K} centroid vectors, "
-                         f"found {len(rows)}")
-    return {int(r.vec_id) - IVF_CENTROID_BASE:
-            [float(x) for x in r.embedding] for r in rows}
-
-
-def ann_ivf_topk_scaled(spark, sf_dir: str, nprobe: int = 1) -> DataFrame:
-    """``ann_ivf_topk`` on the Arrow coarse quantizer — the entry point
-    a deployment scales the cell count through (pair with centroids
-    from curation.kmeans_assign_scaled for data-fitted cells).
-    ``nprobe`` is the recall dial on THIS backend (r12): each query
-    probes its nprobe nearest cells (ivf_cells_arrow's probe_cells),
-    corpus rows keep one cell — same semantics as the literal
-    ann_ivf_topk_probed, pinned equal in tests."""
-    cells = ivf_cells_arrow(load_spread(spark, sf_dir, "embeddings"),
-                            _ivf_corpus_centroids(spark, sf_dir),
-                            nprobe=nprobe)
-    q_cell = (F.explode("probe_cells") if nprobe > 1
-              else F.col("cell"))
-    queries = cells.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"), F.col("nrm").alias("q_nrm"),
-        q_cell.alias("q_cell"))
-    if nprobe > 1:
-        cells = cells.drop("probe_cells")
-    dot = F.expr(_SPARK_DOT.format(a="q_emb", b="embedding"))
-    scored = (F.broadcast(queries)
-              .join(cells, (F.col("q_cell") == F.col("cell"))
-                    & (F.col("query_id") != F.col("vec_id")))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.try_divide(dot, F.col("q_nrm") * F.col("nrm"))
-                      .alias("cosine")))
-    return _topk_per_query(scored)
-
-
 @register(
     "ann_ivf_topk",
     oracle=f"""
@@ -565,79 +479,10 @@ def ann_ivf_topk_scaled(spark, sf_dir: str, nprobe: int = 1) -> DataFrame:
 )
 def ann_ivf_topk(spark, sf_dir: str) -> DataFrame:
     cells = _ivf_cells(spark, sf_dir)
-    queries = cells.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"), F.col("nrm").alias("q_nrm"),
-        F.col("cell").alias("q_cell"))
-    dot = F.expr(_SPARK_DOT.format(a="q_emb", b="embedding"))
-    # eqNullSafe, not ==, on the cell key (r19, guide §2.4/§4.4 analog):
-    # a plain equi-join makes InferFiltersFromConstraints inject
-    # isnotnull(cell) below the corpus-side projection, and `cell` is
-    # the full k x dims argmax fold — the dominant per-row cost of this
-    # query — so every corpus row paid the fold TWICE (once in the
-    # inferred Filter, once in the Project that emits the column). The
-    # fold's cid is an array index over a literal centroid array and is
-    # never NULL (NULL/short embeddings yield NULL cosines, but the
-    # argmax still returns a struct with a literal cid), so the
-    # inferred filter kept every row and <=> is row-for-row identical
-    # to = here; the join stays a broadcast hash join (EqualNullSafe is
-    # an equi-key for ExtractEquiJoinKeys).
-    scored = (F.broadcast(queries)
-              .join(cells, F.col("q_cell").eqNullSafe(F.col("cell"))
-                    & (F.col("query_id") != F.col("vec_id")))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.try_divide(dot, F.col("q_nrm") * F.col("nrm"))
-                      .alias("cosine")))
-    return _topk_per_query(scored)
-
-
-def ann_ivf_topk_probed(spark, sf_dir: str, nprobe: int = 2) -> DataFrame:
-    """IVF ANN with the standard ``nprobe`` recall knob: corpus vectors
-    keep their single nearest cell, but each QUERY probes its nprobe
-    nearest cells — the recall/cost dial every IVF index exposes
-    (candidates scanned scale ~nprobe/IVF_K of the corpus; nprobe=IVF_K
-    degenerates to exact brute-force search, asserted in
-    tests/test_similarity_topk.py).
-
-    Same zero-exchange shape as the nprobe=1 form: the query-side probe
-    list is a literal-folded array_sort over the 8 (cos, cid) structs
-    (sorted by cos DESC, cid ASC — ties keep the smallest cid, matching
-    the argmax fold) + a size-nprobe slice + explode, all narrow; then
-    the same broadcast cell equi-join and two-phase top-k. The catalog's
-    ``ann_ivf_topk`` stays the oracle-pinned nprobe=1 form.
-    """
-    if not 1 <= nprobe <= IVF_K:
-        raise ValueError(f"nprobe must be in [1, {IVF_K}], got {nprobe}")
-    norms, choices = _norms_and_centroid_choices(spark, sf_dir)
-    best = F.aggregate(
-        F.slice(choices, 2, IVF_K - 1),
-        F.element_at(choices, 1),
-        lambda acc, c: F.when(c["cos"] > acc["cos"], c).otherwise(acc))
-    cells = norms.select("vec_id", "embedding", "nrm",
-                         best["cid"].alias("cell"))
-    # (-cos, cid) structs so ascending array_sort gives cos DESC with
-    # cid ASC tie-break; take the first nprobe cell ids
-    ordered = F.array_sort(F.transform(
-        choices, lambda c: F.struct((-c["cos"]).alias("ncos"),
-                                    c["cid"].alias("cid"))))
-    probe_cells = F.transform(F.slice(ordered, 1, nprobe),
-                              lambda s: s["cid"])
-    queries = (norms.filter(F.col("vec_id") < N_QUERIES)
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("q_emb"),
-                       F.col("nrm").alias("q_nrm"),
-                       F.explode(probe_cells).alias("q_cell")))
-    dot = F.expr(_SPARK_DOT.format(a="q_emb", b="embedding"))
-    # eqNullSafe on the cell key: see ann_ivf_topk — kills the inferred
-    # always-true isnotnull(<argmax fold>) Filter that re-evaluated the
-    # k x dims fold on every corpus row; identical rows out.
-    scored = (F.broadcast(queries)
-              .join(cells, F.col("q_cell").eqNullSafe(F.col("cell"))
-                    & (F.col("query_id") != F.col("vec_id")))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.try_divide(dot, F.col("q_nrm") * F.col("nrm"))
-                      .alias("cosine")))
-    return _topk_per_query(scored)
+    # the argmax cid is never NULL, so the cell key joins with <=> —
+    # no inferred isnotnull Filter re-evaluating the fold (_score_topk)
+    return _score_topk(_catalog_queries(cells, "cell"), cells,
+                       key="cell", key_never_null=True)
 
 
 def ann_topk_frames(queries: DataFrame, corpus: DataFrame,
@@ -659,16 +504,28 @@ def ann_topk_frames(queries: DataFrame, corpus: DataFrame,
     ``queries``: (query_id_col, embedding); ``corpus``: (corpus_id_col,
     embedding). Returns (query_id, neighbor_id, cosine, rk <= k) with
     the catalog operators' exact scoring (ordered-fold dots, bounded
-    two-phase top-k, cosine DESC / neighbor_id ASC total order).
+    two-phase top-k, cosine DESC / neighbor_id ASC total order). With
+    the catalog's own query slice, ``method="brute"`` is
+    ``ann_cosine_topk`` and ``method="lsh", n_planes=8`` is
+    ``ann_lsh_topk`` (pinned in tests/test_similarity_topk.py).
 
     - ``method="brute"``: broadcast the query batch, rank every corpus
       row — the correctness baseline, one narrow corpus scan.
     - ``method="lsh"``: hyperplane signatures on both sides (same
       deterministic md5 plane family, corpus-level width decision via
       the census on EACH side) -> bucket equi-join; ``n_planes``
-      defaults to the corpus-tracking scaled_n_planes; ``nprobe_bits``
-      > 0 multi-probes the query side (data-side mask explode), the
-      recall dial at high plane counts.
+      defaults to the corpus-tracking scaled_n_planes, which keeps the
+      per-bucket candidate count ~``target_bucket_size`` instead of
+      the 8-bit form's ~corpus²/256 trend.
+    - ``nprobe_bits`` > 0: multi-probe LSH (Lv et al. 2007's
+      perturbation idea on sign-LSH) — the corpus keeps ONE bucket per
+      vector, each query also probes every bucket within Hamming
+      distance ``nprobe_bits`` of its signature, so high plane counts
+      keep their recall. The C(n_planes, <=nprobe_bits) masks ship as
+      ONE array<long> literal exploded and XORed once on the query
+      side, so the plan is flat in the mask count (VERDICT r11 item 5;
+      test_multiprobe_plan_flat_in_masks); ``nprobe_bits=n_planes``
+      probes every bucket, i.e. the brute-force answer.
     - ``exclude_matching_ids``: drop candidates whose corpus id equals
       the query id (the catalog semantics, for query batches drawn
       from the corpus itself); pass False for external query ids.
@@ -713,18 +570,14 @@ def ann_topk_frames(queries: DataFrame, corpus: DataFrame,
                 "exclude_matching_ids=False for external query ids, or "
                 "align the id types")
 
-    def _maybe_bcast(df):
-        return F.broadcast(df) if broadcast_queries else df
-    nrm = F.sqrt(F.expr(_SPARK_DOT.format(a="embedding", b="embedding")))
+    nrm = _norm()
     c_cols = [F.col(corpus_id_col).alias("vec_id"), F.col("embedding"),
               nrm.alias("nrm")]
     q_cols = [F.col(query_id_col).alias("query_id"),
               F.col("embedding").alias("q_emb"), nrm.alias("q_nrm")]
-    match = (F.col("query_id") != F.col("vec_id")) if exclude_matching_ids \
-        else F.lit(True)
+    key = None
     if method == "brute":
-        scored = (_maybe_bcast(queries.select(*q_cols))
-                  .join(corpus.select(*c_cols), match))
+        q_feats, c_feats = queries.select(*q_cols), corpus.select(*c_cols)
     else:
         if (n_planes is None or nprobe_bits == "auto") \
                 and corpus_rows is None:
@@ -734,65 +587,26 @@ def ann_topk_frames(queries: DataFrame, corpus: DataFrame,
         if nprobe_bits == "auto":
             nprobe_bits = auto_nprobe_bits(n_planes, corpus_rows,
                                            target_bucket_size)
-        c_norm = corpus.select(*c_cols,
-                               bucket_col_for(corpus, n_planes,
-                                              width=width)
-                               .alias("bucket"))
+        c_feats = corpus.select(*c_cols,
+                                bucket_col_for(corpus, n_planes,
+                                               width=width)
+                                .alias("bucket"))
         q_bucket = bucket_col_for(queries, n_planes, width=width)
         if nprobe_bits:
             masks = _probe_masks(n_planes, nprobe_bits)
-            q_norm = (queries.select(*q_cols, q_bucket.alias("_qb"),
-                                     F.explode(F.lit(masks)
-                                               .cast("array<long>"))
-                                     .alias("_mask"))
-                      .select("query_id", "q_emb", "q_nrm",
-                              F.col("_qb").bitwiseXOR(F.col("_mask"))
-                              .alias("q_bucket")))
+            q_feats = (queries.select(*q_cols, q_bucket.alias("_qb"),
+                                      F.explode(F.lit(masks)
+                                                .cast("array<long>"))
+                                      .alias("_mask"))
+                       .select("query_id", "q_emb", "q_nrm",
+                               F.col("_qb").bitwiseXOR(F.col("_mask"))
+                               .alias("q_bucket")))
         else:
-            q_norm = queries.select(*q_cols, q_bucket.alias("q_bucket"))
-        scored = (_maybe_bcast(q_norm)
-                  .join(c_norm,
-                        (F.col("q_bucket") == F.col("bucket")) & match))
-    dot = F.expr(_SPARK_DOT.format(a="q_emb", b="embedding"))
-    return _topk_per_query(
-        scored.select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.try_divide(dot, F.col("q_nrm") * F.col("nrm"))
-                      .alias("cosine")), k)
-
-
-def ann_ivf_topk_fitted(spark, sf_dir: str, k: int = IVF_K,
-                        nprobe: int = 1, iters: int = 3) -> DataFrame:
-    """IVF ANN over a DATA-FITTED coarse quantizer (r12): the cells
-    come from `curation.kmeans_fit_scaled` (Arrow-backed Lloyd loop at
-    corpus-tracking k) instead of the catalog's arbitrary corpus
-    vectors — the real index-build path a deployment runs, closing the
-    curation -> ANN loop the two modules' docstrings promise each
-    other. Everything downstream is the scaled machinery:
-    `ivf_cells_arrow` assignment (plan flat in k) + the ``nprobe``
-    recall dial + the bounded two-phase top-k. Fitted cells partition
-    the corpus where the data actually clusters, so at equal probe
-    cost they dominate the arbitrary-vector cells on recall and
-    balance (measured in BENCH_NOTES r12)."""
-    from .curation import kmeans_fit_scaled
-
-    emb = load_spread(spark, sf_dir, "embeddings")
-    cents = kmeans_fit_scaled(emb, k=k, iters=iters)
-    cells = ivf_cells_arrow(emb, cents, nprobe=nprobe)
-    q_cell = (F.explode("probe_cells") if nprobe > 1 else F.col("cell"))
-    queries = cells.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"), F.col("nrm").alias("q_nrm"),
-        q_cell.alias("q_cell"))
-    if nprobe > 1:
-        cells = cells.drop("probe_cells")
-    dot = F.expr(_SPARK_DOT.format(a="q_emb", b="embedding"))
-    scored = (F.broadcast(queries)
-              .join(cells, (F.col("q_cell") == F.col("cell"))
-                    & (F.col("query_id") != F.col("vec_id")))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.try_divide(dot, F.col("q_nrm") * F.col("nrm"))
-                      .alias("cosine")))
-    return _topk_per_query(scored)
+            q_feats = queries.select(*q_cols, q_bucket.alias("q_bucket"))
+        key = "bucket"
+    return _score_topk(q_feats, c_feats, k, key=key,
+                       exclude_self=exclude_matching_ids,
+                       broadcast=broadcast_queries)
 
 
 # ---------------------------------------------------------------------------
@@ -876,12 +690,7 @@ def ivf_cell_col(centroids: list) -> F.Column:
     ``_ivf_cells`` total order). One narrow projection, no exchange;
     the maintained-corpus maintenance loop stamps this on every
     survivor when the index pins ``ivf_centroids``."""
-    choices = _centroid_choices(centroids)
-    best = F.aggregate(
-        F.slice(choices, 2, len(centroids) - 1),
-        F.element_at(choices, 1),
-        lambda acc, c: F.when(c["cos"] > acc["cos"], c).otherwise(acc))
-    return best["cid"]
+    return _nearest_cid(_centroid_choices(centroids), len(centroids))
 
 
 def ivf_probe_cells_col(centroids: list, nprobe: int) -> F.Column:
@@ -922,6 +731,13 @@ def ann_ivf_topk_frames(queries: DataFrame, corpus: DataFrame,
     — a deterministic probe order and NULL result cosines, never an
     ANSI 0/0.
 
+    ``centroids`` is a list (cid == index). Standalone corpora get
+    their ``cell`` from :func:`ivf_cell_col` or, past the literal
+    ceiling, :func:`ivf_cells_arrow`; a DATA-FITTED quantizer is
+    ``curation.kmeans_fit_scaled(corpus, k)`` (~3x the single-probe
+    recall of arbitrary corpus-vector cells, BENCH_NOTES r12).
+    ``nprobe=len(centroids)`` probes every cell, i.e. brute force.
+
     ``cell_pushdown`` (default on): ONE bounded driver action collects
     the query batch's distinct probed cells (<= len(centroids) small
     ints — a micro-batch-sized query frame, same budget class as the
@@ -937,7 +753,7 @@ def ann_ivf_topk_frames(queries: DataFrame, corpus: DataFrame,
             "(columns include 'cell') — maintained corpora get it "
             "when the embedding index pins ivf_centroids; standalone "
             "frames via ivf_cell_col(centroids)")
-    nrm = F.sqrt(F.expr(_SPARK_DOT.format(a="embedding", b="embedding")))
+    nrm = _norm()
     if len(centroids) * len(centroids[0]) > IVF_LITERAL_CEILING:
         # past the literal-expression ceiling (deployment-sized
         # quantizers: n_cells ~ sqrt(corpus)), derive the probe lists
@@ -972,38 +788,29 @@ def ann_ivf_topk_frames(queries: DataFrame, corpus: DataFrame,
                                nrm.alias("q_nrm"))
                    .join(probes.unionByName(zz), "query_id")
                    .select("query_id", "q_emb", "q_nrm",
-                           F.explode("_pc").alias("cell")))
+                           F.explode("_pc").alias("q_cell")))
     else:
         q_feats = queries.select(
             F.col(query_id_col).alias("query_id"),
             F.col("embedding").alias("q_emb"), nrm.alias("q_nrm"),
             F.explode(ivf_probe_cells_col(centroids, nprobe))
-            .alias("cell"))
+            .alias("q_cell"))
     if cell_pushdown:
-        probed = sorted(r.cell for r in
-                        q_feats.select("cell").distinct().collect())
+        probed = sorted(r.q_cell for r in
+                        q_feats.select("q_cell").distinct().collect())
         if not probed:
             corpus = corpus.filter(F.lit(False))
         else:
             corpus = corpus.filter(F.col("cell").isin(probed))
     c_feats = corpus.select(F.col(corpus_id_col).alias("vec_id"),
-                            F.col("embedding").alias("c_emb"),
-                            nrm.alias("c_nrm"),
-                            F.col("cell"))
-    if broadcast_queries:
-        q_feats = F.broadcast(q_feats)
-    dot = F.expr(_SPARK_DOT.format(a="q_emb", b="c_emb"))
-    pairs = q_feats.join(c_feats, "cell")
-    if exclude_matching_ids:
-        pairs = pairs.filter(F.col("query_id") != F.col("vec_id"))
-    scored = pairs.select(
-        "query_id", F.col("vec_id").alias("neighbor_id"),
-        F.try_divide(dot, F.col("q_nrm") * F.col("c_nrm"))
-        .alias("cosine"))
+                            "embedding", nrm.alias("nrm"), "cell")
     # no pair dedup needed: each corpus row carries exactly ONE cell
     # and a query's probe list holds distinct cids, so the equi-join
-    # yields at most one row per (query, neighbor)
-    return _topk_per_query(scored, k)
+    # yields at most one row per (query, neighbor). A materialized
+    # cell column can be NULL, so the key stays a plain `=`.
+    return _score_topk(q_feats, c_feats, k, key="cell",
+                       exclude_self=exclude_matching_ids,
+                       broadcast=broadcast_queries)
 
 
 def ivf_nprobe_for_recall(queries_sample: DataFrame, corpus: DataFrame,
@@ -1157,53 +964,15 @@ def _exact_rerank(cand: DataFrame, queries: DataFrame,
     publish as the codes, so coverage holds by construction there), or
     opt into the loud ``check_coverage`` sample in
     :func:`ann_topk_frames_quantized`."""
-    nrm = F.sqrt(F.expr(_SPARK_DOT.format(a="embedding", b="embedding")))
-    exact = exact_corpus.select(F.col("vec_id").alias("neighbor_id"),
-                                F.col("embedding").alias("c_emb"),
-                                nrm.alias("c_nrm"))
+    nrm = _norm()
+    exact = exact_corpus.select("vec_id", "embedding", nrm.alias("nrm"))
     q_feats = queries.select(F.col(query_id_col).alias("query_id"),
                              F.col("embedding").alias("q_emb"),
                              nrm.alias("q_nrm"))
-    dot = F.expr(_SPARK_DOT.format(a="q_emb", b="c_emb"))
-    rescored = (cand.join(exact, "neighbor_id")
-                .join(F.broadcast(q_feats), "query_id")
-                .select("query_id", "neighbor_id",
-                        F.try_divide(dot, F.col("q_nrm") * F.col("c_nrm"))
-                        .alias("cosine")))
-    return _topk_per_query(rescored, k)
-
-
-def ann_cosine_topk_quantized(spark, sf_dir: str,
-                              top_k: int = TOP_K) -> DataFrame:
-    """Brute-force cosine top-k over the INT8-quantized corpus — the
-    storage-tier serving form: scores are computed directly on the
-    int8 codes (integer dot x one scale product per pair; cosine is
-    scale-invariant so the per-vector scales cancel entirely in the
-    normalized score). Output schema matches ann_cosine_topk; the
-    recall differential vs the exact form is pinned in
-    tests/test_quantization.py."""
-    emb = load_spread(spark, sf_dir, "embeddings")
-    qemb = quantize_embeddings_int8(emb)
-    norms = qemb.select(
-        "vec_id", "q",
-        F.sqrt(F.aggregate(
-            F.zip_with(F.col("q"), F.col("q"),
-                       lambda a, b: (a.cast("double")
-                                     * b.cast("double"))),
-            F.lit(0.0), lambda acc, v: acc + v)).alias("qn"))
-    queries = norms.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("q").alias("qq"),
-        F.col("qn").alias("q_qn"))
-    dot = F.aggregate(
-        F.zip_with(F.col("qq"), F.col("q"),
-                   lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v)
-    scored = (F.broadcast(queries)
-              .join(norms, F.col("query_id") != F.col("vec_id"))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.try_divide(dot, F.col("q_qn") * F.col("qn"))
-                      .alias("cosine")))
-    return _topk_per_query(scored, top_k)
+    pairs = (cand.select("query_id", F.col("neighbor_id").alias("vec_id"))
+             .join(exact, "vec_id")
+             .join(F.broadcast(q_feats), "query_id"))
+    return _cosine_topk(pairs, k)
 
 
 # ---------------------------------------------------------------------------

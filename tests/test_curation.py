@@ -203,13 +203,14 @@ def test_assign_arrow_raises_on_ragged_width(spark):
 
 def test_ivf_cells_arrow_matches_literal(spark, sf_dir):
     from solana_event_stream_spark.operators.similarity import (
-        _ivf_cells, _ivf_corpus_centroids, ivf_cells_arrow)
+        _ivf_cells, _norms_and_centroid_choices, ivf_cells_arrow)
 
     lit = {r.vec_id: (r.cell, r.nrm) for r in
            _ivf_cells(spark, sf_dir).collect()}
     emb = load_spread(spark, sf_dir, "embeddings")
     arw = {r.vec_id: (r.cell, r.nrm) for r in
-           ivf_cells_arrow(emb, _ivf_corpus_centroids(spark, sf_dir))
+           ivf_cells_arrow(emb, dict(enumerate(
+               _norms_and_centroid_choices(spark, sf_dir)[2])))
            .collect()}
     assert set(lit) == set(arw)
     assert {v: c for v, (c, _) in lit.items()} == \
@@ -219,16 +220,26 @@ def test_ivf_cells_arrow_matches_literal(spark, sf_dir):
 
 
 def test_ann_ivf_topk_scaled_matches_catalog(spark, sf_dir):
+    """The catalog's literal-fold IVF equals the frame entry point over
+    the Arrow-assigned corpus (same corpus-vector centroids, nprobe=1)."""
     from solana_event_stream_spark.catalog import load_catalog
     from solana_event_stream_spark.operators.similarity import (
-        ann_ivf_topk_scaled)
+        N_QUERIES, _norms_and_centroid_choices, ann_ivf_topk_frames,
+        ivf_cells_arrow)
 
     cat = load_catalog()
+    emb = load_spread(spark, sf_dir, "embeddings")
+    cents = _norms_and_centroid_choices(spark, sf_dir)[2]
+    queries = (emb.filter(F.col("vec_id") < N_QUERIES)
+               .select(F.col("vec_id").alias("query_id"), "embedding"))
     lit = sorted((r.query_id, r.neighbor_id, r.rk)
                  for r in cat["ann_ivf_topk"].spark_fn(spark, sf_dir)
                  .collect())
     arw = sorted((r.query_id, r.neighbor_id, r.rk)
-                 for r in ann_ivf_topk_scaled(spark, sf_dir).collect())
+                 for r in ann_ivf_topk_frames(
+                     queries, ivf_cells_arrow(emb, dict(enumerate(cents))),
+                     cents, exclude_matching_ids=True,
+                     cell_pushdown=False).collect())
     assert lit == arw
 
 

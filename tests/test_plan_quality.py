@@ -261,6 +261,20 @@ def test_ann_topk_reduce_is_two_phase(spark):
         assert plain, (name, parts)
 
 
+def test_ivf_cell_join_infers_no_fold_filter(spark):
+    # The catalog IVF cell key is the k x dims argmax fold. Joined with
+    # `=`, InferFiltersFromConstraints adds isnotnull(<fold>) below the
+    # corpus projection and every corpus row evaluates the fold twice
+    # (the r19 0.71x regression); the never-NULL key joins with <=>, so
+    # the only inferred null checks left are on vec_id.
+    import re
+    from solana_event_stream_spark.catalog import load_catalog
+    df = load_catalog()["ann_ivf_topk"].spark_fn(spark, SF)
+    opt = df._jdf.queryExecution().optimizedPlan().toString()
+    args = re.findall(r"isnotnull\(([^)]*)", opt)
+    assert args and all(a.startswith("vec_id#") for a in args), args
+
+
 def test_load_spread_is_self_tuning(spark, tmp_path):
     """load_spread's round-robin shuffle is a small-SF parallelism
     crutch only: when the scan already has >= defaultParallelism splits

@@ -31,18 +31,35 @@ def test_quantize_roundtrip_bounds(spark):
     assert max(abs(c) for c in codes[2]) == 127   # scale maps to +/-127
 
 
+def _quantized_brute_topk(spark, sf_dir):
+    """Brute-force top-k scored directly on the int8 codes: the
+    catalog query slice and the corpus both quantized, codes cast to
+    array<double> (cosine is scale-invariant, so the per-vector scales
+    never enter the score)."""
+    from solana_event_stream_spark.operators.similarity import (
+        N_QUERIES, ann_topk_frames, quantize_embeddings_int8)
+    from solana_event_stream_spark.tables import load_spread
+
+    codes = quantize_embeddings_int8(
+        load_spread(spark, sf_dir, "embeddings")).select(
+        "vec_id", F.col("q").cast("array<double>").alias("embedding"))
+    queries = (codes.filter(F.col("vec_id") < N_QUERIES)
+               .select(F.col("vec_id").alias("query_id"), "embedding"))
+    return ann_topk_frames(queries, codes, method="brute")
+
+
 def test_quantized_topk_recall_on_corpus(spark, sf_dir):
     """recall@k of the int8 brute-force top-k vs the exact catalog
     form must be high (~1/254 per-element noise barely perturbs
     cosine ranks): >= 0.9 overall on the real corpus."""
     from solana_event_stream_spark.operators.similarity import (
-        ann_cosine_topk, ann_cosine_topk_quantized)
+        ann_cosine_topk)
 
     exact = {}
     for r in ann_cosine_topk(spark, sf_dir).collect():
         exact.setdefault(r.query_id, set()).add(r.neighbor_id)
     quant = {}
-    for r in ann_cosine_topk_quantized(spark, sf_dir).collect():
+    for r in _quantized_brute_topk(spark, sf_dir).collect():
         quant.setdefault(r.query_id, set()).add(r.neighbor_id)
     assert set(quant) == set(exact)
     hits = sum(len(exact[q] & quant[q]) for q in exact)
@@ -51,10 +68,7 @@ def test_quantized_topk_recall_on_corpus(spark, sf_dir):
 
 
 def test_quantized_plan_no_udf_no_cross(spark, sf_dir):
-    from solana_event_stream_spark.operators.similarity import (
-        ann_cosine_topk_quantized)
-
-    plan = (ann_cosine_topk_quantized(spark, sf_dir)
+    plan = (_quantized_brute_topk(spark, sf_dir)
             ._jdf.queryExecution().executedPlan().toString())
     assert "PythonUDF" not in plan
     assert "CartesianProduct" not in plan

@@ -43,12 +43,38 @@ def test_two_phase_topk_matches_naive(spark):
     assert any(len(set(v)) < len(v) for v in per_q.values())
 
 
+def _catalog_query_slice(spark, sf):
+    """The catalog ANN forms' fixed query batch (vec_id < N_QUERIES)
+    as an ann_topk_frames / ann_ivf_topk_frames query frame."""
+    from solana_event_stream_spark.operators.similarity import N_QUERIES
+    from solana_event_stream_spark.tables import load_spread
+
+    return (load_spread(spark, sf, "embeddings")
+            .filter(F.col("vec_id") < N_QUERIES)
+            .select(F.col("vec_id").alias("query_id"), "embedding"))
+
+
+def _ivf_probed(spark, sf, nprobe, cells=None):
+    """The catalog IVF search with each query probing its ``nprobe``
+    nearest cells: ann_ivf_topk_frames over the catalog query slice and
+    the literal-fold cell assignment (or ``cells``, e.g. the Arrow
+    backend's) with the catalog's corpus-vector centroids."""
+    from solana_event_stream_spark.operators.similarity import (
+        _ivf_cells, _norms_and_centroid_choices, ann_ivf_topk_frames)
+
+    cents = _norms_and_centroid_choices(spark, sf)[2]
+    return ann_ivf_topk_frames(
+        _catalog_query_slice(spark, sf),
+        _ivf_cells(spark, sf) if cells is None else cells, cents,
+        nprobe=nprobe, exclude_matching_ids=True, cell_pushdown=False)
+
+
 def test_ivf_nprobe_recall_monotone_and_exact_at_full_probe(spark):
     """The nprobe knob must behave like a real IVF index: recall vs the
     brute-force ground truth is monotone in nprobe, and probing every
     cell degenerates to the exact result."""
     from solana_event_stream_spark.operators.similarity import (
-        IVF_K, ann_cosine_topk, ann_ivf_topk, ann_ivf_topk_probed)
+        IVF_K, ann_cosine_topk, ann_ivf_topk)
     sf = "/root/testdata/sf0.001"
 
     def result_set(df):
@@ -60,23 +86,21 @@ def test_ivf_nprobe_recall_monotone_and_exact_at_full_probe(spark):
         return len(pairs & truth) / len(truth)
 
     r1 = recall(result_set(ann_ivf_topk(spark, sf)))
-    r1p = recall(result_set(ann_ivf_topk_probed(spark, sf, nprobe=1)))
-    r2 = recall(result_set(ann_ivf_topk_probed(spark, sf, nprobe=2)))
-    rfull = result_set(ann_ivf_topk_probed(spark, sf, nprobe=IVF_K))
+    r1p = recall(result_set(_ivf_probed(spark, sf, 1)))
+    r2 = recall(result_set(_ivf_probed(spark, sf, 2)))
+    rfull = result_set(_ivf_probed(spark, sf, IVF_K))
 
     assert r1p == r1            # nprobe=1 == the argmax single-cell form
     assert r2 >= r1             # more probes never lose recall
     assert rfull == truth       # probing all cells == exact brute force
 
 
-def test_ivf_probed_assignment_stays_narrow(spark):
+def test_ivf_probed_assignment_stays_narrow(spark, sf_dir):
     """The probe-cell computation must keep the zero-exchange shape of
     the nprobe=1 assignment: no Window, no cross join."""
     import io
     from contextlib import redirect_stdout
-    from solana_event_stream_spark.operators.similarity import (
-        ann_ivf_topk_probed)
-    df = ann_ivf_topk_probed(spark, "/root/testdata/sf0.001", nprobe=2)
+    df = _ivf_probed(spark, sf_dir, 2)
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
@@ -95,8 +119,11 @@ def test_scaled_lsh_entry_points(spark):
         dedup_embedding_cosine, dedup_embedding_cosine_scaled,
         scaled_n_planes)
     from solana_event_stream_spark.operators.similarity import (
-        ann_cosine_topk, ann_lsh_topk, ann_lsh_topk_scaled)
+        ann_lsh_topk, ann_topk_frames)
+    from solana_event_stream_spark.tables import load_spread
     sf = "/root/testdata/sf0.001"
+    emb = load_spread(spark, sf, "embeddings")
+    q_slice = _catalog_query_slice(spark, sf)
 
     # formula: log2-tracking with an 8-plane floor
     assert scaled_n_planes(10_000, 64) == 8          # floor binds
@@ -105,7 +132,8 @@ def test_scaled_lsh_entry_points(spark):
     assert scaled_n_planes(0, 64) == 8
 
     # n_planes=8 == the catalog plan, bit for bit
-    assert sorted(map(tuple, ann_lsh_topk_scaled(spark, sf, 8).collect())) \
+    assert sorted(map(tuple, ann_topk_frames(q_slice, emb, method="lsh",
+                                             n_planes=8).collect())) \
         == sorted(map(tuple, ann_lsh_topk(spark, sf).collect()))
     assert sorted(map(tuple,
                       dedup_embedding_cosine_scaled(spark, sf, 8)
@@ -116,9 +144,8 @@ def test_scaled_lsh_entry_points(spark):
     # every returned pair still carries its TRUE cosine — bucketing
     # changes recall, never the correctness of a returned score
     import numpy as np
-    from solana_event_stream_spark.tables import load_spread
     vecs = {r.vec_id: np.asarray(r.embedding, dtype=np.float64)
-            for r in load_spread(spark, sf, "embeddings").collect()}
+            for r in emb.collect()}
     got9 = dedup_embedding_cosine_scaled(spark, sf, n_planes=9,
                                          limit=200_000).collect()
     got8 = dedup_embedding_cosine_scaled(spark, sf, n_planes=8,
@@ -130,7 +157,8 @@ def test_scaled_lsh_entry_points(spark):
         assert abs(r.cosine - true_cos) < 1e-9, (r.doc_a, r.doc_b)
     # ann form at 9 planes: runs, ranks stay dense per query
     by_q = {}
-    for r in ann_lsh_topk_scaled(spark, sf, n_planes=9).collect():
+    for r in ann_topk_frames(q_slice, emb, method="lsh",
+                             n_planes=9).collect():
         by_q.setdefault(r.query_id, []).append(r.rk)
     assert all(sorted(v) == list(range(1, len(v) + 1))
                for v in by_q.values())
@@ -180,23 +208,28 @@ def test_lsh_multiprobe_recall_ladder(spark, sf_dir):
     from solana_event_stream_spark.catalog import load_catalog
     from solana_event_stream_spark.operators.dedup import _N_PLANES
     from solana_event_stream_spark.operators.similarity import (
-        _probe_masks, ann_lsh_topk_multiprobe)
+        _probe_masks, ann_topk_frames)
+    from solana_event_stream_spark.tables import load_spread
 
     cat = load_catalog()
+    emb = load_spread(spark, sf_dir, "embeddings")
+    q_slice = _catalog_query_slice(spark, sf_dir)
+
+    def multiprobe(bits):
+        return ann_topk_frames(q_slice, emb, n_planes=_N_PLANES,
+                               nprobe_bits=bits)
 
     def pairs(df):
         return {(r.query_id, r.neighbor_id, r.rk) for r in df.collect()}
 
     single = pairs(cat["ann_lsh_topk"].spark_fn(spark, sf_dir))
     brute = pairs(cat["ann_cosine_topk"].spark_fn(spark, sf_dir))
-    assert pairs(ann_lsh_topk_multiprobe(spark, sf_dir,
-                                         nprobe_bits=0)) == single
-    assert pairs(ann_lsh_topk_multiprobe(
-        spark, sf_dir, nprobe_bits=_N_PLANES)) == brute
+    assert pairs(multiprobe(0)) == single
+    assert pairs(multiprobe(_N_PLANES)) == brute
 
     recalls = []
     for b in (0, 1, 2):
-        got = pairs(ann_lsh_topk_multiprobe(spark, sf_dir, nprobe_bits=b))
+        got = pairs(multiprobe(b))
         recalls.append(len({p[:2] for p in got}
                            & {p[:2] for p in brute}) / len(brute))
     assert recalls == sorted(recalls)
@@ -221,35 +254,24 @@ def test_multiprobe_plan_flat_in_masks(spark, sf_dir):
     constant (tiny) number of times in the analyzed plan regardless of
     nprobe_bits, and the high-mask-count form still executes."""
     from solana_event_stream_spark.operators.similarity import (
-        _probe_masks, ann_lsh_topk_multiprobe)
+        _probe_masks, ann_topk_frames)
+    from solana_event_stream_spark.tables import load_spread
 
     assert len(_probe_masks(20, 3)) == 1 + 20 + 190 + 1140
 
     def xor_count(df):
         return df._jdf.queryExecution().analyzed().toString().count("^")
 
-    lo = ann_lsh_topk_multiprobe(spark, sf_dir, n_planes=20, nprobe_bits=1)
-    hi = ann_lsh_topk_multiprobe(spark, sf_dir, n_planes=20, nprobe_bits=3)
+    emb = load_spread(spark, sf_dir, "embeddings")
+    q_slice = _catalog_query_slice(spark, sf_dir)
+    lo = ann_topk_frames(q_slice, emb, n_planes=20, nprobe_bits=1)
+    hi = ann_topk_frames(q_slice, emb, n_planes=20, nprobe_bits=3)
     n_lo, n_hi = xor_count(lo), xor_count(hi)
     assert n_lo == n_hi, (n_lo, n_hi)
     assert n_hi <= 4, n_hi  # one XOR per plan (x a couple of reprints)
     # and the 1,351-mask plan actually runs (it would take minutes to
     # even construct in the per-mask-Column form)
     assert hi.count() >= 0
-
-
-def test_lsh_scaled_nprobe_passthrough(spark, sf_dir):
-    """nprobe_bits on the scaled entry point routes through the
-    multi-probe form at the same plane count (r12: the recall dial
-    belongs WITH the scale knob)."""
-    from solana_event_stream_spark.operators.similarity import (
-        ann_lsh_topk_multiprobe, ann_lsh_topk_scaled)
-
-    got = sorted(map(tuple, ann_lsh_topk_scaled(
-        spark, sf_dir, n_planes=9, nprobe_bits=2).collect()))
-    want = sorted(map(tuple, ann_lsh_topk_multiprobe(
-        spark, sf_dir, n_planes=9, nprobe_bits=2).collect()))
-    assert got == want and got
 
 
 def test_banded_dedup_identity(spark, sf_dir):
@@ -322,26 +344,37 @@ def test_banded_dedup_rejects_ragged(spark):
         banded_cosine_pairs(emb, n_bands=2, band_bits=8)
 
 
-def test_ivf_scaled_nprobe_matches_literal_and_brute(spark, sf_dir):
+def test_ivf_scaled_nprobe_matches_literal_and_brute(spark, sf_dir,
+                                                     monkeypatch):
     """The Arrow-scaled IVF's nprobe dial (r12): probe-cell ORDER
     matches the literal form's (cos DESC, cid ASC) total order —
-    nprobe=2 results equal ann_ivf_topk_probed(2), and nprobe=IVF_K
+    nprobe=2 results over the Arrow-assigned cells (literal or Arrow
+    query probes) equal those of the literal form, and nprobe=IVF_K
     probes every cell, i.e. exact brute force."""
     from solana_event_stream_spark.catalog import load_catalog
+    from solana_event_stream_spark.operators import similarity
     from solana_event_stream_spark.operators.similarity import (
-        IVF_K, ann_ivf_topk_probed, ann_ivf_topk_scaled)
+        IVF_K, _norms_and_centroid_choices, ivf_cells_arrow)
+    from solana_event_stream_spark.tables import load_spread
 
     def rows(df):
         return sorted((r.query_id, r.neighbor_id, r.rk)
                       for r in df.collect())
 
-    assert rows(ann_ivf_topk_scaled(spark, sf_dir, nprobe=2)) \
-        == rows(ann_ivf_topk_probed(spark, sf_dir, nprobe=2))
+    cents = _norms_and_centroid_choices(spark, sf_dir)[2]
+    arrow_cells = ivf_cells_arrow(load_spread(spark, sf_dir, "embeddings"),
+                                  dict(enumerate(cents)))
+    want = rows(_ivf_probed(spark, sf_dir, 2))
+    assert rows(_ivf_probed(spark, sf_dir, 2, cells=arrow_cells)) == want
+    # past the literal ceiling the query probes come from the Arrow
+    # backend's probe_cells too
+    monkeypatch.setattr(similarity, "IVF_LITERAL_CEILING", 0)
+    assert rows(_ivf_probed(spark, sf_dir, 2, cells=arrow_cells)) == want
+    monkeypatch.undo()
     brute = rows(load_catalog()["ann_cosine_topk"].spark_fn(spark, sf_dir))
-    assert rows(ann_ivf_topk_scaled(spark, sf_dir, nprobe=IVF_K)) == brute
+    assert rows(_ivf_probed(spark, sf_dir, IVF_K, cells=arrow_cells)) \
+        == brute
     import pytest as _pytest
-    from solana_event_stream_spark.operators.similarity import (
-        ivf_cells_arrow)
     with _pytest.raises(ValueError, match="nprobe"):
         ivf_cells_arrow(None, {0: [1.0], 1: [0.5]}, nprobe=3)
 
@@ -355,7 +388,7 @@ def test_ann_topk_frames_matches_catalog_and_handles_external_queries(
     its source vector."""
     from solana_event_stream_spark.catalog import load_catalog
     from solana_event_stream_spark.operators.similarity import (
-        N_QUERIES, ann_lsh_topk_multiprobe, ann_topk_frames)
+        N_QUERIES, ann_topk_frames)
     from solana_event_stream_spark.tables import load_spread
 
     cat = load_catalog()
@@ -371,9 +404,6 @@ def test_ann_topk_frames_matches_catalog_and_handles_external_queries(
         == rows(cat["ann_cosine_topk"].spark_fn(spark, sf_dir))
     assert rows(ann_topk_frames(q_slice, emb, method="lsh", n_planes=8)) \
         == rows(cat["ann_lsh_topk"].spark_fn(spark, sf_dir))
-    assert rows(ann_topk_frames(q_slice, emb, method="lsh", n_planes=8,
-                                nprobe_bits=2)) \
-        == rows(ann_lsh_topk_multiprobe(spark, sf_dir, nprobe_bits=2))
 
     # external query batch: 5 corpus vectors, slightly perturbed, new ids
     src = emb.filter(F.col("vec_id") < 5)
@@ -395,6 +425,38 @@ def test_ann_topk_frames_matches_catalog_and_handles_external_queries(
     import pytest as _pytest
     with _pytest.raises(ValueError, match="method"):
         ann_topk_frames(q_slice, emb, method="ivf")
+
+
+def test_null_embedding_query_rows_are_deterministic(spark):
+    """A NULL-embedding query scores NULL cosines (try_divide, never an
+    ANSI error) and still returns deterministic rows: brute force ranks
+    every corpus row at a NULL cosine, so the neighbor_id tie-break
+    picks ids 0-4; under LSH a NULL vector folds to the all-zero
+    signature, which here only the NULL-embedding corpus rows share."""
+    import hashlib
+
+    from solana_event_stream_spark.operators.similarity import (
+        ann_topk_frames)
+
+    def vec(i):
+        return [int(hashlib.md5(f"nq{i}_{d}".encode()).hexdigest()[:4],
+                    16) / 32767.5 - 1.0 for d in range(8)]
+
+    corpus = spark.createDataFrame(
+        [(i, vec(i)) for i in range(20)] + [(20, None), (21, None)],
+        "vec_id long, embedding array<double>")
+    queries = spark.createDataFrame(
+        [(100, None)], "query_id long, embedding array<double>")
+
+    def rows(**kw):
+        return sorted(map(tuple, ann_topk_frames(
+            queries, corpus, exclude_matching_ids=False, **kw).collect()),
+            key=lambda r: r[3])
+
+    assert rows(method="brute") == [(100, n, None, n + 1)
+                                    for n in range(5)]
+    assert rows(method="lsh", n_planes=8) == [(100, 20, None, 1),
+                                              (100, 21, None, 2)]
 
 
 def test_dedup_survivors_apply_step(spark, sf_dir):
@@ -434,7 +496,7 @@ def test_ivf_fitted_quantizer(spark, sf_dir):
     from solana_event_stream_spark.operators.curation import (
         kmeans_assign_scaled, kmeans_fit_scaled, assign_arrow)
     from solana_event_stream_spark.operators.similarity import (
-        IVF_K, ann_ivf_topk_fitted)
+        IVF_K, ann_ivf_topk_frames, ivf_cells_arrow)
     from solana_event_stream_spark.tables import load_spread
 
     emb = load_spread(spark, sf_dir, "embeddings")
@@ -444,7 +506,16 @@ def test_ivf_fitted_quantizer(spark, sf_dir):
                    kmeans_assign_scaled(emb, k=8, iters=2).collect()))
     assert a == b
 
-    got = ann_ivf_topk_fitted(spark, sf_dir, k=8, nprobe=2, iters=2)
+    def fitted(fit, nprobe):
+        """IVF over k-means-fitted cells: the Arrow assignment of the
+        corpus to kmeans_fit_scaled centroids, probed by the catalog
+        query slice."""
+        return ann_ivf_topk_frames(
+            _catalog_query_slice(spark, sf_dir), ivf_cells_arrow(emb, fit),
+            [fit[c] for c in sorted(fit)], nprobe=nprobe,
+            exclude_matching_ids=True, cell_pushdown=False)
+
+    got = fitted(cents, nprobe=2)
     by_q = {}
     for r in got.collect():
         by_q.setdefault(r.query_id, []).append(r.rk)
@@ -455,8 +526,8 @@ def test_ivf_fitted_quantizer(spark, sf_dir):
                    load_catalog()["ann_cosine_topk"].spark_fn(
                        spark, sf_dir).collect())
     full = sorted((r.query_id, r.neighbor_id, r.rk) for r in
-                  ann_ivf_topk_fitted(spark, sf_dir, k=IVF_K,
-                                      nprobe=IVF_K, iters=1).collect())
+                  fitted(kmeans_fit_scaled(emb, k=IVF_K, iters=1),
+                         nprobe=IVF_K).collect())
     assert full == brute
 
 
@@ -707,7 +778,8 @@ def test_auto_nprobe_recall_at_high_plane_count(spark, sf_dir):
     with the plan still flat in the mask count."""
     from solana_event_stream_spark.catalog import load_catalog
     from solana_event_stream_spark.operators.similarity import (
-        ann_lsh_topk_multiprobe, auto_nprobe_bits)
+        ann_topk_frames, auto_nprobe_bits)
+    from solana_event_stream_spark.tables import load_spread
 
     # closed-form checks: a corpus big enough for its plane count has
     # no excess -> 0 bits; this 500-row corpus at 16 planes -> enough
@@ -721,10 +793,12 @@ def test_auto_nprobe_recall_at_high_plane_count(spark, sf_dir):
 
     brute = pairs(load_catalog()["ann_cosine_topk"].spark_fn(
         spark, sf_dir))
+    emb = load_spread(spark, sf_dir, "embeddings")
+    q_slice = _catalog_query_slice(spark, sf_dir)
 
     def recall(b):
-        got = pairs(ann_lsh_topk_multiprobe(spark, sf_dir, n_planes=16,
-                                            nprobe_bits=b))
+        got = pairs(ann_topk_frames(q_slice, emb, n_planes=16,
+                                    nprobe_bits=b))
         return len(got & brute) / len(brute)
 
     r0, r3, r_auto = recall(0), recall(3), recall("auto")
