@@ -166,16 +166,15 @@ def run_probe(spark, scale: int, n_buckets: int,
                 events = dedup_event_stream(events,
                                             watermark=dedup_watermark)
             if strict_tag_ttl_ms is not None:
-                # J3 STRICT keyed-state backend (r18, VERDICT r17
-                # item 7): the transformWithStateInPandas /
-                # applyInPandasWithState parity form, keyed by
-                # signature with processing-time TTL as the bounded-
-                # state envelope — the arm the 492k-key decade probe
-                # measures (the r17 run covered only the
-                # dropDuplicatesWithinWatermark form)
+                # J3 STRICT keyed-state form (r18, VERDICT r17 item
+                # 7): applyInPandasWithState keyed by signature with
+                # processing-time TTL as the bounded-state envelope —
+                # the arm the 492k-key decade probe measures (the r17
+                # run covered only the dropDuplicatesWithinWatermark
+                # form)
                 from solana_event_stream_spark.streaming.state import (
-                    tag_dev_trades_strict)
-                events = tag_dev_trades_strict(
+                    tag_dev_trades_stateful)
+                events = tag_dev_trades_stateful(
                     events, ttl_ms=strict_tag_ttl_ms)
             if sink == "callback":      # full K1 path: enrich+order+collect
                 batch_fn = foreach_batch_callback(
@@ -328,10 +327,9 @@ def main_state_growth_strict(spark, scale: int = 500,
                              ttl_ms: int = 30_000) -> None:
     """VERDICT r17 item 7: the r17 492k-key state plateau covered the
     `dropDuplicatesWithinWatermark` J3 form; this is the SAME feed
-    through the STRICT backend (`tag_dev_trades_strict`, keyed by
-    signature, processing-time TTL as the bounded-state envelope —
-    transformWithStateInPandas where the runtime supports it, else
-    applyInPandasWithState). Emits the per-batch state-rows series +
+    through the STRICT keyed form (`tag_dev_trades_stateful`,
+    applyInPandasWithState keyed by signature, processing-time TTL as
+    the bounded-state envelope). Emits the per-batch state-rows series +
     trigger p50/p95 and an eviction verdict: with a 30 s TTL over a
     multi-minute run, steady-state rows must track the TTL horizon
     (keys touched in the last 30 s), not keys seen — TTL is the

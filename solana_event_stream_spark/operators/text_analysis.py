@@ -470,7 +470,7 @@ def _g3_from_g2(g2_col, hw_col) -> F.Column:
     array: hash3[i] = xxhash64(hash2[i], w[i+2]) — identical values to
     ``_rep_gram_hashes(hw, 3)`` by construction (same chain), but the
     (a, b) pair hashes are reused instead of recomputed (one fewer
-    xxhash64 pass per row; measured 0.96x in scripts/rep_tally_ab.py)."""
+    xxhash64 pass per row; measured 0.96x, BENCH_NOTES Round 13)."""
     s = F.size(hw_col)
     return F.when(s >= 3, F.zip_with(
         F.slice(g2_col, 1, s - 2), F.slice(hw_col, 3, s - 2),

@@ -37,9 +37,10 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..registry import (COMPUTE_BUDGET_PROGRAM_ID, INNER_DISCRIMINATORS,
-                        INSTRUCTION_DISCRIMINATORS,
+from ..registry import (BONK_CREATES, BONK_TRADES, COMPUTE_BUDGET_PROGRAM_ID,
+                        INNER_DISCRIMINATORS, INSTRUCTION_DISCRIMINATORS,
                         PROGRAM_ID_BY_PROTOCOL, PROTOCOL_BY_PROGRAM_ID,
+                        PUMPFUN_CREATES, PUMPFUN_TRADES,
                         RAYDIUM_AMM_V4_PROGRAM_ID, SYSTEM_PROGRAMS,
                         ZERO_PUBKEY)
 from ..schemas import EVENT_SCHEMA
@@ -231,16 +232,6 @@ def _arrow_event_schema():
     return to_arrow_schema(EVENT_SCHEMA)
 
 
-# J3 event classes (core/event_parser.rs:674-693, 724-731): creates
-# register dev addresses under their signature, trades of the SAME
-# signature read them.
-_PF_CREATES = ("PumpFunCreateToken", "PumpFunCreateV2Token")
-_BONK_CREATES = ("BonkInitialize", "BonkInitializeV2",
-                 "BonkInitializeWithToken2022")
-_PF_TRADES = ("PumpFunBuy", "PumpFunSell")
-_BONK_TRADES = ("BonkBuyExactIn", "BonkBuyExactOut", "BonkSellExactIn",
-                "BonkSellExactOut")
-
 DEV_FLAG = "is_dev_create_token_trade"
 
 
@@ -307,10 +298,10 @@ def _flag_table(tbl, field):
     def _at(name, idx):
         return tbl.column(name).take(pa.array(idx, pa.int64())).to_pylist()
 
-    pf_trade, bonk_trade = _is(_PF_TRADES), _is(_BONK_TRADES)
+    pf_trade, bonk_trade = _is(PUMPFUN_TRADES), _is(BONK_TRADES)
     trade = pf_trade | bonk_trade
     flag = np.zeros(tbl.num_rows, bool)
-    creates = np.flatnonzero(_is(_PF_CREATES + _BONK_CREATES))
+    creates = np.flatnonzero(_is(PUMPFUN_CREATES + BONK_CREATES))
     pf_pool: dict = {}
     bonk_pool: dict = {}
     for s, e, user, creator in zip(
@@ -318,7 +309,7 @@ def _flag_table(tbl, field):
             _at("user", creates), _at("creator", creates)):
         if s is None:            # a NULL key joins no pool
             continue
-        if e in _PF_CREATES:
+        if e in PUMPFUN_CREATES:
             pool = pf_pool.setdefault(s, set())
             if user is not None:
                 pool.add(user)
@@ -671,7 +662,7 @@ def enrich_events(events: DataFrame, bot_wallet: str | None) -> DataFrame:
     def _in(types):
         return "event_type IN (" + ", ".join(f"'{t}'" for t in types) + ")"
 
-    is_pf, is_bonk = _in(_PF_TRADES), _in(_BONK_TRADES)
+    is_pf, is_bonk = _in(PUMPFUN_TRADES), _in(BONK_TRADES)
 
     # SQL-quote the caller-supplied wallet ('' escaping, r18 ADVICE):
     # semantics equal the old F.lit comparison for every input, and a

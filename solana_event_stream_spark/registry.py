@@ -32,6 +32,15 @@ COMPUTE_BUDGET_PROGRAM_ID = "ComputeBudget111111111111111111111111111111"
 
 # base58 of 32 zero bytes == Pubkey::default() == system program id
 ZERO_PUBKEY = "11111111111111111111111111111111"
+# J3 event classes (core/event_parser.rs:674-693, 724-731): creates
+# register dev addresses under their signature, trades of the SAME
+# signature read them.
+PUMPFUN_CREATES = ("PumpFunCreateToken", "PumpFunCreateV2Token")
+PUMPFUN_TRADES = ("PumpFunBuy", "PumpFunSell")
+BONK_CREATES = ("BonkInitialize", "BonkInitializeV2",
+                "BonkInitializeWithToken2022")
+BONK_TRADES = ("BonkBuyExactIn", "BonkBuyExactOut", "BonkSellExactIn",
+               "BonkSellExactOut")
 # solana_sdk::system_program::ID (yellowstone_sub_system.rs:44)
 SYSTEM_PROGRAM_ID = "11111111111111111111111111111111"
 SOL_MINT = "So11111111111111111111111111111111111111111"

@@ -23,8 +23,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-from .protobuf_compat import ensure_protobuf
-
 _STATE_STORE_PROVIDERS = {
     "rocksdb": ("org.apache.spark.sql.execution.streaming.state."
                 "RocksDBStateStoreProvider"),
@@ -37,10 +35,8 @@ def _state_store_provider() -> str:
     """Streaming state-store backend. RocksDB by default: it is the
     100 TB-scale answer (state spills to local disk instead of executor
     heap, changelog checkpointing uploads per-batch deltas instead of
-    full snapshots) and the transformWithStateInPandas operator
-    REQUIRES it (multi-column-family state). ``SPARK_GRAFT_STATE_STORE=
-    hdfs`` restores the in-memory provider for A/B measurement
-    (BENCH_NOTES round 8)."""
+    full snapshots). ``SPARK_GRAFT_STATE_STORE=hdfs`` restores the
+    in-memory provider for A/B measurement (BENCH_NOTES round 8)."""
     name = os.environ.get("SPARK_GRAFT_STATE_STORE", "rocksdb").lower()
     return _STATE_STORE_PROVIDERS.get(name, name)
 
@@ -87,8 +83,7 @@ _RUNTIME_CONF = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Streaming state store (read at query start, so runtime-settable):
     # RocksDB + changelog checkpointing — bounded executor memory and
-    # O(delta) per-batch checkpoint uploads at 100 TB state; also the
-    # required provider for transformWithStateInPandas. See
+    # O(delta) per-batch checkpoint uploads at 100 TB state. See
     # _state_store_provider for the env override.
     "spark.sql.streaming.stateStore.providerClass":
         _state_store_provider(),
@@ -154,12 +149,6 @@ def tune(spark: SparkSession) -> SparkSession:
 def get_spark(app_name: str = "solana-event-stream-spark",
               master: str | None = None) -> SparkSession:
     """Build (or fetch) a tuned local SparkSession."""
-    # Before the JVM starts: make google.protobuf importable (PYTHONPATH
-    # is inherited driver -> JVM -> python workers) so the
-    # transformWithStateInPandas backend lights up where a bundled
-    # runtime exists. No-op when protobuf is properly installed or
-    # absent entirely.
-    ensure_protobuf()
     cpus = n_cpus()
     builder = SparkSession.builder.appName(app_name).master(
         master or f"local[{cpus}]")

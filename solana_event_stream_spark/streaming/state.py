@@ -29,16 +29,12 @@ or a replay seam): keyed streaming state per signature, mirroring
   signatures — with time-based instead of count-based victim selection.
   Default 10 minutes, configurable.
 
-Implementation note: both state backends are provided, sharing one
-replay core (`_replay_rows`): `applyInPandasWithState` (GroupState,
-always available) and `transformWithStateInPandas` (Spark 4 arbitrary
-state v2, gated on google.protobuf because its state-server control
-channel needs it, and on the RocksDB state-store provider because its
-state is multi-column-family). `protobuf_compat.ensure_protobuf()`
-(called by `session.get_spark` before the JVM starts) discovers a
-bundled pure-python protobuf runtime on hosts without an installed
-one, so both backends execute in this sandbox; `tag_dev_trades_strict`
-auto-selects.
+The keyed form runs on `applyInPandasWithState` (GroupState), the
+`mapGroupsWithState`-style primitive every Spark 4 host has. The
+create/trade rules live once, in `_fold_event`: the keyed form folds
+each signature's rows through it over that key's pools, and the K1
+driver sink (`fold_rows_with_global_state`) over one
+`CappedGlobalState` held across micro-batches.
 """
 
 from __future__ import annotations
@@ -48,14 +44,8 @@ from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (ArrayType, BooleanType, LongType, StringType,
                                StructField, StructType)
 
-from ..registry import ZERO_PUBKEY
-
-PUMPFUN_CREATES = ("PumpFunCreateToken", "PumpFunCreateV2Token")
-PUMPFUN_TRADES = ("PumpFunBuy", "PumpFunSell")
-BONK_CREATES = ("BonkInitialize", "BonkInitializeV2",
-                "BonkInitializeWithToken2022")
-BONK_TRADES = ("BonkBuyExactIn", "BonkBuyExactOut", "BonkSellExactIn",
-               "BonkSellExactOut")
+from ..registry import (BONK_CREATES, BONK_TRADES, PUMPFUN_CREATES,
+                        PUMPFUN_TRADES, ZERO_PUBKEY)
 
 INPUT_COLS = ["signature", "slot", "transaction_index", "outer_index",
               "inner_index", "event_type", "user", "creator", "payer"]
@@ -76,44 +66,6 @@ STATE_SCHEMA = StructType([
 ])
 
 
-def _replay_rows(frames, dev: set, bonk: set):
-    """Shared sequential replay core for both state backends: sort the
-    batch's rows into event order and fold them through the dev/bonk
-    pools exactly like the reference's callback loop
-    (event_parser.rs:674-731). Returns (output tuples, dev, bonk)."""
-    import pandas as pd
-
-    pdf = pd.concat(frames) if len(frames) > 1 else frames[0]
-    pdf = pdf.sort_values(
-        ["slot", "transaction_index", "outer_index", "inner_index"],
-        na_position="first")
-
-    out = []
-    for row in pdf.itertuples(index=False):
-        et = row.event_type
-        flag = None
-        if et in PUMPFUN_CREATES:
-            # event_parser.rs:674-689
-            if row.user is not None:
-                dev.add(row.user)
-            if row.creator not in (None, ZERO_PUBKEY) \
-                    and row.creator != row.user:
-                dev.add(row.creator)
-        elif et in BONK_CREATES:
-            # event_parser.rs:724-727
-            if row.creator is not None:
-                bonk.add(row.creator)
-        elif et in PUMPFUN_TRADES:
-            # event_parser.rs:690-693
-            flag = (row.user in dev) or (row.creator in dev)
-        elif et in BONK_TRADES:
-            # event_parser.rs:728-731
-            flag = row.payer in bonk
-        out.append((row.signature, row.slot, row.transaction_index,
-                    row.outer_index, row.inner_index, et, flag))
-    return out, dev, bonk
-
-
 class CappedGlobalState:
     """Exact-parity port of the reference's GlobalState capacity envelope
     (`streaming/event_parser/core/global_state.rs:7-8,40-68`): at most
@@ -128,11 +80,12 @@ class CappedGlobalState:
 
     This is the single-consumer form: the reference's GlobalState is a
     process-wide singleton read inside its callback parse loop, which
-    maps to our K1 driver-parity sink (`foreach_batch_callback`), where
-    one Python object persists across micro-batches. The DISTRIBUTED
-    strict backends below cannot express a cross-key count (Spark keyed
-    state is partitioned per signature) and bound memory with per-key
-    TTL instead — same guarantee, time-based victims (module docstring).
+    maps to our K1 driver-parity sink (`foreach_batch_callback_strict`),
+    where one Python object persists across micro-batches. The keyed
+    form (`tag_dev_trades_stateful`) cannot express a cross-key count
+    (Spark keyed state is partitioned per signature) and bounds memory
+    with per-key timeouts instead — same guarantee, time-based victims
+    (module docstring).
     """
 
     MAX_SIGNATURES = 1000       # global_state.rs:7
@@ -218,29 +171,27 @@ def fold_rows_with_global_state(rows, state: CappedGlobalState) -> list:
             for r in rows]
 
 
-def replay_with_global_state(pdf, state: CappedGlobalState):
-    """Sequential replay of one micro-batch's rows through a
-    CappedGlobalState — the reference's callback parse loop verbatim
-    (event_parser.rs:674-731), including the capacity envelope: a
-    signature's create registrations can be EVICTED before its trade
-    arrives, in which case the trade is simply unflagged (False), never
-    an error. Returns OUTPUT_SCHEMA-shaped tuples in event order.
+def _replay_rows(frames, dev: set, bonk: set):
+    """The keyed form's replay of one signature's rows: sort them into
+    event order and fold each through `_fold_event` over the key's
+    (dev, bonk) pools, which one key never lets reach the cap. Returns
+    (output tuples, dev, bonk)."""
+    import pandas as pd
 
-    Driver-side by design: this is the K1 single-consumer path, where
-    the reference's GlobalState singleton actually lives. Use it inside
-    `foreachBatch` with one CappedGlobalState held across batches.
-    """
+    pdf = pd.concat(frames) if len(frames) > 1 else frames[0]
     pdf = pdf.sort_values(
         ["slot", "transaction_index", "outer_index", "inner_index"],
         na_position="first")
+    state = CappedGlobalState()
     out = []
     for row in pdf.itertuples(index=False):
+        state._m.setdefault(row.signature, (dev, bonk))   # the one key
         flag = _fold_event(state, row.signature, row.event_type,
                            row.user, row.creator, row.payer)
         out.append((row.signature, row.slot, row.transaction_index,
                     row.outer_index, row.inner_index, row.event_type,
                     flag))
-    return out
+    return out, dev, bonk
 
 
 def _make_processor(ttl_ms: int | None):
@@ -290,116 +241,6 @@ def tag_dev_trades_stateful(events: DataFrame,
                 stateStructType=STATE_SCHEMA,
                 outputMode="Append",
                 timeoutConf=timeout))
-
-
-def has_transform_with_state() -> bool:
-    """True when the transformWithStateInPandas runtime is usable.
-
-    The operator itself ships with PySpark, but its state-server control
-    channel speaks protobuf (python `google.protobuf`). Where protobuf
-    is not pip-installed, `protobuf_compat.ensure_protobuf()` (run by
-    `session.get_spark` BEFORE the JVM starts, so workers inherit the
-    path) can activate a bundled runtime; this check reports the
-    resulting importability. The strict-state API auto-selects the
-    GroupState form when this returns False.
-    """
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        return False
-    return True
-
-
-_ROCKSDB_PROVIDER = ("org.apache.spark.sql.execution.streaming.state."
-                     "RocksDBStateStoreProvider")
-
-
-def _require_rocksdb_provider(df: DataFrame) -> None:
-    """transformWithStateInPandas keeps multi-column-family state, which
-    the default HDFSBackedStateStoreProvider rejects at the first
-    micro-batch ([UNSUPPORTED_FEATURE.STATE_STORE_MULTIPLE_COLUMN_
-    FAMILIES]) — fail at plan-build time with an actionable message
-    instead. `session.get_spark` configures RocksDB by default."""
-    spark = df.sparkSession
-    provider = spark.conf.get("spark.sql.streaming.stateStore.providerClass",
-                              "")
-    if "RocksDB" not in provider:
-        raise RuntimeError(
-            "transformWithStateInPandas requires the RocksDB state store: "
-            "set spark.sql.streaming.stateStore.providerClass="
-            f"{_ROCKSDB_PROVIDER} before starting the query (the "
-            "session.get_spark factory does this by default; "
-            "SPARK_GRAFT_STATE_STORE=hdfs overrides it)")
-
-
-def tag_dev_trades_stateful_tws(events: DataFrame,
-                                ttl_ms: int | None = 10 * 60 * 1000
-                                ) -> DataFrame:
-    """Strict J3 on the `transformWithStateInPandas` backend (Spark 4
-    arbitrary-state v2): identical replay semantics to
-    `tag_dev_trades_stateful` (shared `_replay_rows` core), with the
-    reference's bounded-state cap expressed as native state TTL
-    (`getValueState(..., ttlDurationMs=...)`) instead of GroupState
-    timeouts. Requires google.protobuf at runtime (check
-    `has_transform_with_state()` first) and the RocksDB state-store
-    provider (session.get_spark's default; checked at plan build).
-    """
-    if not has_transform_with_state():
-        raise ImportError(
-            "transformWithStateInPandas needs google.protobuf, which is "
-            "not installed; use tag_dev_trades_stateful (GroupState) or "
-            "tag_dev_trades_strict() to auto-select")
-    _require_rocksdb_provider(events)
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    class _DevPoolProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "dev_pools", STATE_SCHEMA,
-                ttlDurationMs=ttl_ms)
-
-        def handleInputRows(self, key, rows, timer_values):
-            dev: set = set()
-            bonk: set = set()
-            if self._state.exists():
-                prev = self._state.get()
-                dev = set(prev[0] or [])
-                bonk = set(prev[1] or [])
-            out, dev, bonk = _replay_rows(list(rows), dev, bonk)
-            if dev or bonk:
-                self._state.update((sorted(dev), sorted(bonk)))
-            yield pd.DataFrame(out, columns=[f.name for f in
-                                             OUTPUT_SCHEMA.fields])
-
-        def close(self) -> None:
-            pass
-
-    cols = [c for c in INPUT_COLS if c in events.columns]
-    return (events.select(*cols)
-            .groupBy("signature")
-            .transformWithStateInPandas(
-                statefulProcessor=_DevPoolProcessor(),
-                outputStructType=OUTPUT_SCHEMA,
-                outputMode="Append",
-                timeMode=("ProcessingTime" if ttl_ms is not None
-                          else "None")))
-
-
-def tag_dev_trades_strict(events: DataFrame,
-                          ttl_ms: int | None = 10 * 60 * 1000) -> DataFrame:
-    """Strict J3 on whichever state backend the environment supports:
-    transformWithStateInPandas when protobuf is importable AND the
-    session uses the RocksDB state store, else the
-    applyInPandasWithState form. Semantics are identical (both wrap
-    `_replay_rows`); only the state plumbing differs."""
-    provider = events.sparkSession.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", "")
-    if has_transform_with_state() and "RocksDB" in provider:
-        return tag_dev_trades_stateful_tws(events, ttl_ms)
-    return tag_dev_trades_stateful(events, ttl_ms)
 
 
 # ---------------------------------------------------------------------------

@@ -8,13 +8,6 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# Before any SparkSession (and before test_state's collection-time
-# has_transform_with_state skipif): activate a bundled google.protobuf
-# runtime if none is installed, so the transformWithStateInPandas
-# backend executes rather than skips wherever possible.
-from solana_event_stream_spark.protobuf_compat import ensure_protobuf  # noqa: E402
-ensure_protobuf()
-
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 

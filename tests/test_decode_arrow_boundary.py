@@ -93,8 +93,9 @@ def test_dev_flag_create_and_trade_split_across_arrow_batches(spark):
     batch k+1 flag the trade exactly as the unsplit batch does, and so
     does one input row per batch: the worker carries the trailing
     signature's rows into the next batch."""
-    from solana_event_stream_spark.plans.pipeline import (
-        _BONK_CREATES, _BONK_TRADES, _PF_CREATES, _PF_TRADES, DEV_FLAG)
+    from solana_event_stream_spark.plans.pipeline import DEV_FLAG
+    from solana_event_stream_spark.registry import (
+        BONK_CREATES, BONK_TRADES, PUMPFUN_CREATES, PUMPFUN_TRADES)
     batch = _input_batch(spark)
     whole = _flagged([batch])
     dev_sigs = {s for s, f in zip(whole.column("signature").to_pylist(),
@@ -106,8 +107,8 @@ def test_dev_flag_create_and_trade_split_across_arrow_batches(spark):
     etypes = batch.column("event_type").to_pylist()
     cut = next(i + 1 for i in range(len(sigs) - 1)
                if sigs[i] in dev_sigs and sigs[i + 1] == sigs[i]
-               and etypes[i] in _PF_CREATES + _BONK_CREATES
-               and etypes[i + 1] in _PF_TRADES + _BONK_TRADES)
+               and etypes[i] in PUMPFUN_CREATES + BONK_CREATES
+               and etypes[i + 1] in PUMPFUN_TRADES + BONK_TRADES)
     split = _flagged([batch.slice(0, cut), batch.slice(cut)])
     assert split.equals(whole)
     # one input row per Arrow batch: every transaction cut at every row

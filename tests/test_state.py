@@ -1,32 +1,19 @@
 """Strict cross-batch J3 state vs the window form: the
 split-across-batches fixture the window form cannot flag, plus
-same-batch parity. The cross-batch scenario runs on every state
-backend the environment supports (GroupState always;
-transformWithStateInPandas when google.protobuf is installed)."""
+same-batch parity, on the GroupState keyed form; the driver-side
+capped fold; and a session that leaves the protobuf environment
+alone."""
 
 from __future__ import annotations
 
 import os
+import sys
 import tempfile
 import time
 
-import pytest
-
 from conftest import drain_active_streams, stop_streaming_query
 from solana_event_stream_spark.streaming.state import (
-    INPUT_COLS, has_transform_with_state, tag_dev_trades_stateful,
-    tag_dev_trades_stateful_tws)
-
-BACKENDS = [
-    pytest.param(tag_dev_trades_stateful, id="applyInPandasWithState"),
-    pytest.param(
-        tag_dev_trades_stateful_tws, id="transformWithStateInPandas",
-        marks=pytest.mark.skipif(
-            not has_transform_with_state(),
-            reason="transformWithStateInPandas needs google.protobuf and "
-                   "no installed or bundled runtime was found "
-                   "(protobuf_compat.ensure_protobuf)")),
-]
+    INPUT_COLS, tag_dev_trades_stateful)
 
 _run_seq = 0
 
@@ -45,8 +32,7 @@ SCHEMA = ("signature string, slot long, transaction_index long, "
           "user string, creator string, payer string")
 
 
-def _run_two_batches(spark, batch1, batch2, tmp,
-                     tagger=tag_dev_trades_stateful):
+def _run_two_batches(spark, batch1, batch2, tmp):
     """Write batch1, stream with maxFilesPerTrigger=1, then batch2 —
     forcing the rows into separate micro-batches with shared state."""
     global _run_seq
@@ -60,7 +46,7 @@ def _run_two_batches(spark, batch1, batch2, tmp,
         .coalesce(1).write.mode("append").parquet(src)
     stream = (spark.readStream.schema(SCHEMA)
               .option("maxFilesPerTrigger", "1").parquet(src))
-    tagged = tagger(stream)
+    tagged = tag_dev_trades_stateful(stream)
     q = (tagged.writeStream.format("memory").queryName(sink)
          .option("checkpointLocation", os.path.join(tmp, "ckpt"))
          .trigger(processingTime="1 seconds").start())
@@ -87,12 +73,10 @@ def _run_two_batches(spark, batch1, batch2, tmp,
         spark.catalog.dropTempView(sink)
 
 
-@pytest.mark.parametrize("tagger", BACKENDS)
-def test_create_trade_split_across_batches(spark, tagger):
+def test_create_trade_split_across_batches(spark):
     """The reference's GlobalState flags a trade whose create arrived in
     an EARLIER message (global_state.rs:71-114); the window form cannot.
-    The strict form must — on whichever state backend the environment
-    supports."""
+    The strict form must."""
     dev = "DevWallet1111111111111111111111111111111111"
     other = "OtherWallet111111111111111111111111111111111"
     batch1 = [_event("sigA", 1, "PumpFunCreateToken", user=dev),
@@ -102,7 +86,7 @@ def test_create_trade_split_across_batches(spark, tagger):
               _event("sigBonk", 2, "BonkBuyExactIn", payer=dev),
               _event("sigOther", 2, "PumpFunBuy", user=other)]
     with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as tmp:
-        flags = _run_two_batches(spark, batch1, batch2, tmp, tagger)
+        flags = _run_two_batches(spark, batch1, batch2, tmp)
     # creates carry no flag (reference sets the flag on trades only)
     assert flags[("sigA", "PumpFunCreateToken", 1)] is None
     # cross-batch: dev's later trade in the same signature is flagged
@@ -143,11 +127,6 @@ def test_sequential_order_within_batch(spark):
     assert flags[("sigZ", "PumpFunBuy", 2)] is True    # after, next batch
 
 
-def _pdf(rows):
-    import pandas as pd
-    return pd.DataFrame([{c: r[c] for c in INPUT_COLS} for r in rows])
-
-
 def test_capped_global_state_eviction_envelope():
     """Reference capacity parity (global_state.rs:7-8,40-68): cleanup
     triggers only when the count STRICTLY exceeds the cap, evicts
@@ -183,29 +162,29 @@ def test_capped_replay_degrades_like_reference():
     signature whose create registration was evicted yields an unflagged
     (False) trade — never an error, never a stale flag."""
     from solana_event_stream_spark.streaming.state import (
-        CappedGlobalState, replay_with_global_state)
+        CappedGlobalState, fold_rows_with_global_state)
 
     dev = "DevWallet1111111111111111111111111111111111"
     st = CappedGlobalState(max_entries=3, evict_count=1)
     # batch 1: sigA's create registers dev
-    replay_with_global_state(_pdf(
-        [_event("sigA", 1, "PumpFunCreateToken", user=dev)]), st)
+    fold_rows_with_global_state(
+        [_event("sigA", 1, "PumpFunCreateToken", user=dev)], st)
     # batch 2: filler creates push the store to the cap overshoot (4)
-    replay_with_global_state(_pdf(
+    fold_rows_with_global_state(
         [_event(s, 2, "PumpFunCreateToken", user=dev)
-         for s in ("sigB", "sigC", "sigD")]), st)
+         for s in ("sigB", "sigC", "sigD")], st)
     assert st.signature_count() == 4
     # batch 3: trade BEFORE any further add still sees sigA (no cleanup
     # on reads), then one more create evicts sigA (oldest key)
-    out = replay_with_global_state(_pdf(
-        [_event("sigA", 3, "PumpFunBuy", user=dev)]), st)
-    assert out[0][-1] is True
-    replay_with_global_state(_pdf(
-        [_event("sigE", 4, "PumpFunCreateToken", user=dev)]), st)
-    out = replay_with_global_state(_pdf(
-        [_event("sigA", 5, "PumpFunBuy", user=dev),
-         _event("sigD", 5, "PumpFunBuy", user=dev)]), st)
-    flags = {r[0]: r[-1] for r in out}
+    out = fold_rows_with_global_state(
+        [_event("sigA", 3, "PumpFunBuy", user=dev)], st)
+    assert out[0] is True
+    fold_rows_with_global_state(
+        [_event("sigE", 4, "PumpFunCreateToken", user=dev)], st)
+    batch5 = [_event("sigA", 5, "PumpFunBuy", user=dev),
+              _event("sigD", 5, "PumpFunBuy", user=dev)]
+    out = fold_rows_with_global_state(batch5, st)
+    flags = {r["signature"]: f for r, f in zip(batch5, out)}
     assert flags["sigA"] is False   # evicted: degraded, not an error
     assert flags["sigD"] is True    # survivor keeps its registration
 
@@ -214,8 +193,10 @@ def test_capped_replay_matches_uncapped_strict_form():
     """Under the cap, the capped driver-side fold and the distributed
     _replay_rows core agree row-for-row (shared semantics, different
     state plumbing)."""
+    import pandas as pd
+
     from solana_event_stream_spark.streaming.state import (
-        CappedGlobalState, _replay_rows, replay_with_global_state)
+        CappedGlobalState, _replay_rows, fold_rows_with_global_state)
 
     dev = "DevWallet1111111111111111111111111111111111"
     other = "OtherWallet111111111111111111111111111111111"
@@ -227,39 +208,18 @@ def test_capped_replay_matches_uncapped_strict_form():
             _event("sigX", 1, "BonkInitialize", creator=dev,
                    outer_index=3),
             _event("sigX", 1, "BonkBuyExactIn", payer=dev, outer_index=4)]
-    capped = replay_with_global_state(_pdf(rows), CappedGlobalState())
-    uncapped, _, _ = _replay_rows([_pdf(rows)], set(), set())
-    assert [r[-1] for r in capped] == [r[-1] for r in uncapped]
+    capped = fold_rows_with_global_state(rows, CappedGlobalState())
+    uncapped, _, _ = _replay_rows([pd.DataFrame(rows)[INPUT_COLS]],
+                                  set(), set())
+    assert capped == [r[-1] for r in uncapped]
 
 
-def test_tws_import_gate_and_auto_select(spark):
-    """Without protobuf the TWS form refuses with a clear error and the
-    auto-selector falls back to GroupState; with protobuf both light up
-    (covered by the parametrized cross-batch test above)."""
-    from solana_event_stream_spark.streaming import state as st
-    stream = (spark.readStream.format("rate")
-              .load().selectExpr(
-                  "cast(value as string) signature", "value slot",
-                  "value transaction_index", "0L outer_index",
-                  "0L inner_index", "'PumpFunBuy' event_type",
-                  "null user", "null creator", "null payer"))
-    if st.has_transform_with_state():
-        assert st.tag_dev_trades_strict(stream) is not None
-    else:
-        with pytest.raises(ImportError, match="protobuf"):
-            st.tag_dev_trades_stateful_tws(stream)
-        # auto-select silently uses the GroupState form
-        assert st.tag_dev_trades_strict(stream) is not None
-
-
-@pytest.mark.parametrize("tagger", BACKENDS)
-def test_strict_state_survives_query_restart(spark, tagger):
+def test_strict_state_survives_query_restart(spark):
     """Keyed J3 state must RECOVER from the checkpoint across a full
     query stop/start (the reference process keeps its GlobalState in
     memory for its lifetime; our durable equivalent is the state store
-    checkpoint — for the TWS backend that exercises RocksDB changelog
-    checkpointing end-to-end): a create registered in run 1 must flag a
-    trade delivered in run 2."""
+    checkpoint, RocksDB with changelog checkpointing by default): a
+    create registered in run 1 must flag a trade delivered in run 2."""
     dev = "DevWallet1111111111111111111111111111111111"
     batch1 = [_event("sigR", 1, "PumpFunCreateToken", user=dev)]
     batch2 = [_event("sigR", 2, "PumpFunBuy", user=dev)]
@@ -285,7 +245,7 @@ def test_strict_state_survives_query_restart(spark, tagger):
             rows: list = []
             stream = (spark.readStream.schema(SCHEMA)
                       .option("maxFilesPerTrigger", "1").parquet(src))
-            q = (tagger(stream).writeStream
+            q = (tag_dev_trades_stateful(stream).writeStream
                  .foreachBatch(lambda df, bid: rows.extend(df.collect()))
                  .option("checkpointLocation", ckpt)
                  .trigger(availableNow=True).start())
@@ -312,3 +272,12 @@ def test_strict_state_survives_query_restart(spark, tagger):
         # the dev pool registered in run 1 must have been recovered
         # from the state store checkpoint
         assert flags2[("sigR", "PumpFunBuy")] is True
+
+
+def test_session_leaves_protobuf_environment_alone(spark):
+    """Starting the session must not switch off protobuf's version check
+    or put a protobuf overlay on the driver's or the workers' import
+    path: the keyed form needs no runtime beyond PySpark's own."""
+    assert "TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK" not in os.environ
+    paths = sys.path + os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    assert not [p for p in paths if "ses_spark_pbshim" in p]
